@@ -2,11 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Eager lineage cut for iterative plans (beam-walk hops, NN-Descent
-  * rounds, connected-component label rounds): each round references
-  * its input several times, so without a cut the plan doubles (or
-  * worse) per round — the measured 15 s → 3 s device the serving walk
-  * has used since round 13.
+/** Eager lineage cut for iterative plans — the graph build's
+  * NN-Descent rounds and the connected-component label rounds: each
+  * round references its input several times, so without a cut the
+  * plan doubles (or worse) per round. The graph-beam serving walk does
+  * NOT cut: its bounded state (probes, entries, beam) lives on the
+  * driver between hops, so there is no plan to truncate and nothing
+  * an executor loss can take with it.
   *
   * Default = `localCheckpoint(eager = true)`: executor-local storage,
   * no dfs round-trip — the right call in local mode and on healthy
@@ -18,9 +20,11 @@ import org.apache.spark.sql.DataFrame
   *
   *   spark.graft.checkpoint.reliable = true
   *
-  * switches every cut to reliable `checkpoint(eager = true)` (blocks
-  * written to the checkpoint dir — HDFS/object store on a cluster;
-  * recovery is a re-read, not a failure). The checkpoint dir is taken
+  * switches every cut — the NN-Descent rounds of the navigable-graph
+  * build and `ConnectedComponents`, nothing on the serving path — to
+  * reliable `checkpoint(eager = true)` (blocks written to the
+  * checkpoint dir — HDFS/object store on a cluster; recovery is a
+  * re-read, not a failure). The checkpoint dir is taken
   * from the already-configured SparkContext dir if set, else from
   * `spark.graft.checkpoint.dir`, else a local temp dir (the local-mode
   * fallback so the knob is testable without a cluster). Both paths

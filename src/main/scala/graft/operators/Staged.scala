@@ -114,9 +114,14 @@ object Staged {
     val holder = memo.computeIfAbsent(key, k => new Holder(() => timed(k) {
       val p = stagePath(k)
       build.write.mode("overwrite").parquet(p)
+      schemaMemo.put(k, s.read.parquet(p).schema)
       p
     }))
-    s.read.parquet(evaluate(key, holder))
+    val path = evaluate(key, holder)
+    // the schema inferred once at build time: a stage never changes
+    // after it is written, and inferring again on every read would
+    // run a footer-reading Spark job per serve
+    s.read.schema(schemaMemo.get(key)).parquet(path)
   }
 
   /** Like [[parquet]] but hive-layout-partitioned by `partCol` — one

@@ -552,8 +552,8 @@ object Clustering {
         .withColumn("hrk", row_number().over(w9))
         .filter(col("hrk") <= rh)
         .select(col("va"), col("vb"))
-        // lineage truncation between rounds (the serving-walk
-        // device): each round references its input 5×
+        // lineage truncation between rounds: each round references
+        // its input 5×
         .transform(graft.operators.Lineage.cut)
     }
     val lFinal = ndRound(ndRound(init))
@@ -701,110 +701,140 @@ object Clustering {
     * applies its own result policy (top-8, tombstone mask) without
     * re-walking.
     *
-    * Scale shape (the q174 contract): each hop joins the broadcast
-    * (P·B)-row frontier against the key-partitioned adjacency and the
-    * broadcast P probe payloads — the corpus is never rescanned, hops
-    * are plan-unrolled (q140 fixed-rounds discipline), and the beam is
-    * localCheckpoint'ed per hop (it is referenced twice next hop; the
-    * plan doubled per hop without it — measured 15.2→3.2 s at sf0.1).
+    * Scale shape (the q174 contract): the walk's state is bounded by
+    * serving settings, never by the corpus — P probe payloads, the
+    * ≤ P·16 routed entries, a ≤ P·b beam and ≤ P·b·(deg+1) candidates
+    * per hop — so it lives on the DRIVER between hops (the incremental
+    * top-k stance: carry the small per-session state instead of
+    * recomputing it). A hop runs two map-only scan jobs: the beam's
+    * adjacency rows (`va IN beam`) from the staged graph, and the
+    * payloads of candidates not fetched before (`vec_id IN …`) from
+    * `nodesP`. Scoring applies the shared 4dp cosine to a driver-built
+    * LocalRelation, which Catalyst folds on the driver (no job), and
+    * [[beamCut]] keeps the next beam. No hop cuts lineage — there is
+    * no plan to truncate, and driver-held state is not lost with an
+    * executor.
     */
-  private def beamWalkScored(nodesP: DataFrame, g: DataFrame,
+  private[graft] def beamWalkScored(nodesP: DataFrame, g: DataFrame,
       probes: DataFrame, entries: DataFrame, b: Int, hops: Int): DataFrame = {
-    // `entries` is PER-PROBE (probe_id, vec_id) — see [[routedEntries]].
-    // The init beam is checkpointed like every hop output (r16
-    // optimization): hop-1 references the beam TWICE (union arm +
-    // broadcast build side, separate executions — no exchange reuse
-    // across them), so an un-checkpointed init evaluated the whole
-    // routedEntries subtree (hub scans, two window exchanges) twice.
-    var beam = graft.operators.Lineage.cut(
-      entries.select(col("probe_id"), col("vec_id"))
-        .filter(col("vec_id") =!= col("probe_id")))
-    for (_ <- 1 to hops)
-      beam = graft.operators.Lineage.cut(beamHop(nodesP, g, probes, beam, b))
-    beamScore(nodesP, probes, beam)
-  }
-
-  /** One scored hop of the pre-checkpoint beam plan — factored out of
-    * [[beamWalkScored]] so the per-hop physical plan (the shape the
-    * serving family's cost is made of; the FINAL plan of a walk query
-    * starts at the last checkpoint and hides it) is dumpable by the
-    * plan tooling. */
-  private[graft] def beamHop(nodesP: DataFrame, g: DataFrame,
-      probes: DataFrame, beam: DataFrame, b: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val expanded = g.join(broadcast(beam), beam("vec_id") === g("va"))
-      .select(col("probe_id"), col("vb").as("vec_id"))
-    // Duplicate-collapsed beam (round 13, caught by the BuildProbe
-    // 10× hit gate): the beam keeps at most ONE candidate per (probe,
-    // sim) level — the min-id representative — before the top-b cut.
-    // On a corpus with exact-duplicate vectors (the 10× replica is 10
-    // copies of everything; real crawls ship the same page thousands
-    // of times), every expansion yields whole copy-groups at one sim
-    // value, so an uncollapsed beam-16 holds ~1.6 DISTINCT vectors
-    // and navigation stalls. Copies are interchangeable as ROUTING
-    // waypoints (same out-neighborhood geometry), so collapsing loses
-    // nothing the walk needs. Genuinely distinct vectors tied at the
-    // 4dp-rounded sim collapse too (bounded approximation,
-    // deterministic min-id pick, mirrored in SQL — both engines drop
-    // the same rows).
-    //
-    // Optimization round 16 (guide §2.4, exchange removal — proven
-    // row-identical to the r13 distinct + du-window + rk-window
-    // pipeline, same oracles): ONE exchange per hop instead of three.
-    //   - the candidate `distinct()` was redundant: duplicate
-    //     (probe_id, vec_id) rows carry the same sim, land in the same
-    //     (probe_id, sim) run, and the run-representative cut below
-    //     keeps exactly one row regardless of input multiplicity;
-    //   - both ranking cuts now ride ONE hash(probe_id) exchange +
-    //     one (probe_id, sim DESC, vec_id) sort: in that order the
-    //     old du=1 row (min vec_id per (probe_id, sim)) is precisely
-    //     the first row of its sim run — `!(lag(sim) <=> sim)`, the
-    //     null-safe run-boundary test — and the old rk (row_number
-    //     over the one-per-sim survivors by sim DESC, vec_id) equals
-    //     dense_rank() of sim DESC over ALL rows, because each
-    //     survivor is preceded by exactly its run's distinct sims.
-    //     dense_rank's required (probe_id, sim DESC) ordering is a
-    //     prefix of lag's, so Catalyst plans both Window execs over
-    //     the single sort (no second exchange).
-    val cand = beam.unionByName(expanded)
-      .filter(col("vec_id") =!= col("probe_id"))
-    val wSim = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc)
-    beamScore(nodesP, probes, cand)
-      .withColumn("du", lag(col("sim"), 1).over(w))
-      .withColumn("rk", dense_rank().over(wSim))
-      .filter(!(col("du") <=> col("sim")) && col("rk") <= b)
-      .select(col("probe_id"), col("vec_id"))
-  }
-
-  /** Score candidate (probe_id, vec_id) rows against the corpus —
-    * the walk's broadcast-only scoring join (no exchange). */
-  private def beamScore(nodesP: DataFrame, probes: DataFrame,
-      cand: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val s = nodesP.sparkSession
+    val probe = probes.select(col("probe_id"), col("p_emb"), col("p_nsq"))
+    val node = nodesP.select(col("vec_id"), col("embedding"), col("nsq"))
+    val probeRow = probe.collect().map(r => r.getLong(0) -> r).toMap
+    val payload = scala.collection.mutable.Map.empty[Long, Row]
+    val candSchema = StructType(
+      Seq(StructField("probe_id", LongType), StructField("vec_id", LongType)) ++
+        probe.schema.fields.tail ++ node.schema.fields.tail)
     val sim = Num.fround(
       VectorFns.cosine(VectorFns.dotF("p_emb", "embedding"),
         col("p_nsq"), col("nsq")), 4)
-    nodesP
-      .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(probes), Seq("probe_id"))
-      .select(col("probe_id"), col("vec_id"), sim.as("sim"))
+    // (probe_id, vec_id) pairs scored as (probe_id, vec_id, sim); a
+    // pair whose vector is not in `nodesP` drops out, as in a join
+    def score(cand: Seq[(Long, Long)]): DataFrame = {
+      val missing = cand.map(_._2).distinct.filterNot(payload.contains)
+      if (missing.nonEmpty)
+        node.filter(col("vec_id").isin(missing: _*)).collect()
+          .foreach(r => payload(r.getLong(0)) = r)
+      val rows = cand.distinct.flatMap { case (p, v) =>
+        for (pr <- probeRow.get(p); nr <- payload.get(v))
+          yield Row(p, v, pr.get(1), pr.get(2), nr.get(1), nr.get(2))
+      }
+      s.createDataFrame(rows.asJava, candSchema)
+        .select(col("probe_id"), col("vec_id"), sim.as("sim"))
+    }
+    var beam = entries.select(col("probe_id"), col("vec_id"))
+      .filter(col("vec_id") =!= col("probe_id"))
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))).distinct
+    for (_ <- 1 to hops if beam.nonEmpty) {
+      val adj = g.filter(col("va").isin(beam.map(_._2).distinct: _*))
+        .select(col("va"), col("vb")).collect().toSeq
+        .groupMap(_.getLong(0))(_.getLong(1))
+      val cand = beam ++ beam.flatMap { case (p, v) =>
+        adj.getOrElse(v, Nil).map(p -> _) }
+      beam = beamCut(score(cand.filter { case (p, v) => v != p }).collect().toSeq, b)
+        .map(r => (r.getLong(0), r.getLong(1)))
+    }
+    score(beam)
+  }
+
+  /** A bounded DataFrame (probe payloads, routed entries) collected
+    * once and re-wrapped as a LocalRelation, so the walk's collects and
+    * broadcasts of it run no job to read it again. */
+  private[graft] def onDriver(df: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
+  }
+
+  /** The walk's per-hop beam cut over scored (probe_id, vec_id, sim)
+    * rows: per probe, ONE row per sim level — its minimum vec_id — and
+    * the first `b` levels in Spark's `sim DESC` order (NaN first,
+    * nulls last, 0.0 = -0.0).
+    *
+    * Duplicate collapse (round 13, caught by the BuildProbe 10× hit
+    * gate): on a corpus with exact-duplicate vectors (the 10× replica
+    * is 10 copies of everything; real crawls ship the same page
+    * thousands of times), every expansion yields whole copy-groups at
+    * one sim value, so an uncollapsed beam-16 holds ~1.6 DISTINCT
+    * vectors and navigation stalls. Copies are interchangeable as
+    * ROUTING waypoints (same out-neighborhood geometry), so collapsing
+    * loses nothing the walk needs. Genuinely distinct vectors tied at
+    * the 4dp-rounded sim collapse too (bounded approximation,
+    * deterministic min-id pick, mirrored in SQL — both engines drop
+    * the same rows). Row-identical to the r16 window form
+    * (`!(lag(sim) <=> sim) && dense_rank() <= b` over `sim DESC,
+    * vec_id`), which ClusteringSpec keeps as its reference. */
+  private[graft] def beamCut(scored: Seq[org.apache.spark.sql.Row],
+      b: Int): Seq[org.apache.spark.sql.Row] = {
+    val simDesc: Ordering[org.apache.spark.sql.Row] = (x, y) =>
+      (x.isNullAt(2), y.isNullAt(2)) match {
+        case (true, true) => 0
+        case (true, false) => 1
+        case (false, true) => -1
+        case _ =>
+          val (a, c) = (x.getDouble(2), y.getDouble(2))
+          if (a == c) 0 else java.lang.Double.compare(c, a)
+      }
+    scored.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (_, rows) =>
+      val sorted = rows.sorted(simDesc.orElseBy(_.getLong(1)))
+      (sorted.head +: sorted.zip(sorted.tail).collect {
+        case (prev, r) if simDesc.compare(prev, r) != 0 => r
+      }).take(b)
+    }
   }
 
   /** Probe count of the q174/q182 serving faces — the cut the shared
-    * wiring below, the staged exact harness, and the dumped hop plan
-    * all derive from (ADVICE r16: the plan tooling previously
+    * wiring below, the staged exact harness and the beam-sweep probe
+    * hook all derive from (ADVICE r16: the tooling previously
     * hardcoded its own copy and could silently drift). */
   private[graft] val NavProbes = 8
 
+  /** The full-corpus ROUTING layers of a dir's navigable graph — (hub
+    * table, K=8 super-hub sample) over its hierarchy members — staged
+    * once per dir next to `q174graph`. Both are probe-independent
+    * index artifacts, so every serving face that routes over the full
+    * layers (q174/q177/q179/q181/q182, q180's re-insert attach) reads
+    * them instead of re-deriving the hub group-by and the ranked
+    * super-hub sample per serve. */
+  private def navLayers(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    def nodes = hierMembers(s, dir)
+      .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
+    (graft.operators.Staged.parquet(s, s"q174hubs|$dir")(hubTable(nodes)),
+      graft.operators.Staged.parquet(s, s"q174supers|$dir")(
+        superHubTable(hubRankTable(nodes))))
+  }
+
   /** Shared serving wiring of the q174-family full-index faces (q174,
-    * q182, the dumped hop plan): the staged navigable graph over the
-    * dir's hierarchy members plus the scoring corpus, probe payloads
-    * (vec_id < [[NavProbes]]) and routed entry points — factored to
-    * ONE derivation so the benched queries and the plan tooling can
-    * never disagree on the wiring (ADVICE r16). Returns (nodesP, g,
-    * probes, entries). */
-  private def navServing(s: SparkSession, dir: String)
+    * q181, q182 and the beam-sweep probe hook): the staged navigable
+    * graph over the dir's hierarchy members plus the scoring corpus,
+    * the probe payloads (vec_id < [[NavProbes]], held on the driver)
+    * and entry points routed over the staged [[navLayers]] — factored
+    * to ONE derivation so the benched queries and the probe tooling
+    * can never disagree on the wiring (ADVICE r16). Returns (nodesP,
+    * g, probes, entries). */
+  private[graft] def navServing(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val nodes = hierMembers(s, dir)
       .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
@@ -812,13 +842,12 @@ object Clustering {
       navGraphBuild(nodes, knnRanked(s, dir).select(col("va"), col("vb")))
     }
     val nodesP = nodes.select(col("vec_id"), col("embedding"), col("nsq"))
-    val probesF = nodes.filter(col("vec_id") < NavProbes)
+    val probesF = onDriver(nodes.filter(col("vec_id") < NavProbes)
       .select(col("vec_id").as("probe_id"), col("fcid").as("p_fcid"),
-        col("embedding").as("p_emb"), col("nsq").as("p_nsq"))
+        col("embedding").as("p_emb"), col("nsq").as("p_nsq")))
     val probes = probesF.select(col("probe_id"), col("p_emb"), col("p_nsq"))
-    val entries = routedEntries(probesF, nodes,
-      hubTable(nodes), superHubTable(hubRankTable(nodes)))
-    (nodesP, g, probes, entries)
+    val (hubs, supers) = navLayers(s, dir)
+    (nodesP, g, probes, routedEntries(probesF, nodes, hubs, supers))
   }
 
   /** Shared exact top-20 ground truth of the FULL-index serving faces
@@ -887,18 +916,6 @@ object Clustering {
       exactTop20(nodesP, probes)
     }
 
-  /** [[beamHop]] wired to a dir's staged graph and entry set — the
-    * one-call form the plan tooling dumps (hop-1 of q174's walk),
-    * built from the SAME [[navServing]] wiring as the benched
-    * queries. */
-  private[graft] def beamHopPlan(s: SparkSession, dir: String,
-      b: Int = 16): DataFrame = {
-    val (nodesP, g, probes, entries) = navServing(s, dir)
-    val beam0 = entries.select(col("probe_id"), col("vec_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
-    beamHop(nodesP, g, probes, beam0, b)
-  }
-
   /** DuckDB mirror of [[beamWalkScored]] as CTEs (no leading WITH):
     * expects `$mem(vec_id, emb, nsq)` as the scoring corpus, `$adj(va,
     * vb)` as the adjacency, `p(probe_id, p_emb, p_nsq)` as the probes
@@ -939,55 +956,51 @@ object Clustering {
         ${pre}fbeam AS (${scoreCte(s"${pre}gb$hops")})"""
   }
 
+  /** The q182 beam sweep with PARAMETRIC widths: q174's walk at each
+    * width in `beams`, top-8-ranked per probe and scored against the
+    * staged exact top-20 ([[navExact20]]), one (beam, n_results, hits)
+    * row per width. q182 serves it at 4/8/16; the scale probes (r13
+    * verdict #2) chase the serving knob PAST those widths (at 10× the
+    * knob that restores the sf0.1 hit band lies beyond them) through
+    * the same code, so q182's oracle covers every piece of it. Probes
+    * and entries are collected once and shared by every walk. */
+  private[graft] def beamSweep(s: SparkSession, dir: String,
+      beams: Seq[Int], hops: Int = 5): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val (nodesP, g, probes, navEntries) = navServing(s, dir)
+    val entries = onDriver(navEntries)
+    val exact = navExact20(s, dir)
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col("sim").desc, col("vec_id"))
+    // The walks share only read-only inputs, and each hop job is a
+    // small filtered scan that leaves most task slots idle, so the
+    // walks overlap on a small DEDICATED pool (r17, VERDICT r16 #8: a
+    // finite await turns a wedged job into an error instead of a
+    // silent hang, and the pool is torn down whatever happens).
+    // Measured with TimeProbe at sf0.1 (q182, 4-core box, five warm
+    // runs each): 1.6-2.1 s pooled vs 2.8-4.5 s sequential.
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.DurationInt
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val perBeam =
+      try Await.result(Future.sequence(beams.map { b => Future {
+        beamWalkScored(nodesP, g, probes, entries, b, hops)
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= 8)
+          .join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
+          .agg(count(lit(1)).as("n_results"),
+            sum(coalesce(col("hit"), lit(0))).cast("long").as("hits"))
+          .select(lit(b.toLong).as("beam"), col("n_results"), col("hits"))
+      } }), 30.minutes)
+      finally pool.shutdown()
+    perBeam.reduce(_.unionByName(_)).orderBy(col("beam"))
+  }
+
   /** Base/delta populations of the maintained index (the q162 split:
     * vec_id % 10 = 0 is the arriving batch). Package-visible so the
     * streaming maintenance path ([[graft.streaming.GraphIngest]]) and
     * its spec wire the SAME populations the q175/q176 oracles prove. */
-  /** Probe hook (r13 verdict #2): the q182 beam sweep with PARAMETRIC
-    * widths, so the scale probes can chase the serving knob PAST the
-    * registered 4/8/16 sweep (whose top width is q174's default — at
-    * 10× the knob that restores the sf0.1 hit band lies beyond it)
-    * without churning the audited q182 face. Spark side only, same
-    * staged graph, same shared exact harness; correctness of every
-    * piece of machinery is q182's oracle. */
-  private[graft] def beamSweepProbe(s: SparkSession, dir: String,
-      beams: Seq[Int], hops: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (p, k) = (8, 20)
-    val nodes = hierMembers(s, dir)
-      .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-    val g = graft.operators.Staged.parquet(s, s"q174graph|$dir") {
-      navGraphBuild(nodes, knnRanked(s, dir).select(col("va"), col("vb")))
-    }
-    val nodesP = nodes.select(col("vec_id"), col("embedding"), col("nsq"))
-    val probesF = nodes.filter(col("vec_id") < p)
-      .select(col("vec_id").as("probe_id"), col("fcid").as("p_fcid"),
-        col("embedding").as("p_emb"), col("nsq").as("p_nsq"))
-    val probes = probesF.select(col("probe_id"), col("p_emb"), col("p_nsq"))
-    val entries = routedEntries(probesF, nodes,
-      hubTable(nodes), superHubTable(hubRankTable(nodes)))
-    val sim = Num.fround(
-      VectorFns.cosine(VectorFns.dotF("p_emb", "embedding"),
-        col("p_nsq"), col("nsq")), 4)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val exact = nodesP.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), sim.as("sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("probe_id"), col("vec_id"), lit(1).as("hit"))
-    beams.map { b =>
-      beamWalkScored(nodesP, g, probes, entries, b, hops)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 8)
-        .join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
-        .agg(count(lit(1)).as("n_results"),
-          sum(coalesce(col("hit"), lit(0))).cast("long").as("hits"))
-        .select(lit(b.toLong).as("beam"), col("n_results"), col("hits"))
-    }.reduce(_.unionByName(_)).orderBy(col("beam"))
-  }
-
   private[graft] def navPopulations(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val nodes = hierMembers(s, dir)
@@ -1134,30 +1147,31 @@ object Clustering {
   private def routedEntries(probesF: DataFrame, cellMates: DataFrame,
       hubs: DataFrame, supers: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("hsim").desc, col("vec_id"))
     val cell = probesF.select(col("probe_id"), col("p_fcid").as("fcid"),
         col("p_emb").as("ea"), col("p_nsq").as("na"))
       .join(cellMates.select(col("fcid"), col("vec_id"),
         col("embedding").as("eb"), col("nsq").as("nb")), Seq("fcid"))
       .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), hubSim.as("hsim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 4)
-      .select(col("probe_id"), col("vec_id"))
+      .select(col("probe_id"), col("vec_id"), hubSim.as("hsim"), lit(0).as("part"))
     val routed = hubs
       .select(col("vec_id"), col("embedding").as("eb"), col("nsq").as("nb"))
       .join(broadcast(probesF.select(col("probe_id"),
         col("p_emb").as("ea"), col("p_nsq").as("na"))),
         col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), hubSim.as("hsim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 4)
-      .select(col("probe_id"), col("vec_id"))
+      .select(col("probe_id"), col("vec_id"), hubSim.as("hsim"), lit(1).as("part"))
+    // both top-4 cuts ride one window (partitioned by probe and part)
+    val w = Window.partitionBy(col("probe_id"), col("part"))
+      .orderBy(col("hsim").desc, col("vec_id"))
     val global = probesF.select(col("probe_id"))
       .crossJoin(broadcast(supers.select(col("vec_id"))))
       .filter(col("vec_id") =!= col("probe_id"))
-    cell.unionByName(routed).unionByName(global).distinct()
+    // the three parts may repeat a (probe_id, vec_id) pair: the walk
+    // collects entries to the driver and dedups them there
+    cell.unionByName(routed)
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= 4)
+      .select(col("probe_id"), col("vec_id"))
+      .unionByName(global)
   }
 
   /** DuckDB mirror of [[routedEntries]] as CTEs (no leading WITH):
@@ -1304,8 +1318,8 @@ object Clustering {
     * stability), so re-insert sees exactly the artifact a deployment
     * has on disk. Provenance stays disjoint by key: every reinsert
     * edge touches a deleted id, no compacted edge does. STAGED: the
-    * union is the serving artifact q181 walks (5 plan-unrolled hop
-    * references — unstaged, the attach recomputed per hop).
+    * union is the serving artifact q181 walks (one adjacency scan per
+    * hop — unstaged, the attach recomputed per hop).
     *
     * Scale shape: [[compactedGraph]]'s linear build + q175's attach
     * bounds (cluster-bounded mate join, scoring-free hub join,
@@ -1316,9 +1330,9 @@ object Clustering {
       val comp = compactedGraph(s, dir, nodes, g0)
       val live = nodes.filter(col("vec_id") % 7 =!= 3)
       val del = nodes.filter(col("vec_id") % 7 === 3)
-      val bHub = hubTable(nodes).filter(col("vec_id") % 7 =!= 3)
-      val bSH = superHubTable(hubRankTable(nodes))
-        .filter(col("vec_id") % 7 =!= 3)
+      val (hubs, supers) = navLayers(s, dir)
+      val bHub = hubs.filter(col("vec_id") % 7 =!= 3)
+      val bSH = supers.filter(col("vec_id") % 7 =!= 3)
       comp.unionByName(attachEdges(del, live, bHub, bSH)
         .withColumn("kind", lit("reinsert")))
     }
@@ -1620,11 +1634,10 @@ object Clustering {
     // two independent implementations must agree on every beam
     // member at every rank.
     //
-    // Scale shape: after the staged graph build, a hop is a bounded
-    // (P·B)-row frontier joined against the key-partitioned adjacency
-    // plus a broadcast of the P probe payloads — the corpus is never
-    // rescanned and the driver never iterates over data (hops are
-    // plan-unrolled, the q140 fixed-rounds discipline). Degree is
+    // Scale shape: after the staged graph build, the walk's state —
+    // P probe payloads, a (P·B)-row beam — stays on the driver and a
+    // hop is two filtered scans (the beam's adjacency rows, the new
+    // candidates' payloads), see [[beamWalkScored]]. Degree is
     // constant (≤3 kNN out + ≤3 in + own-hub + 2 node→super-hub; hubs
     // +2R), so hop expansion is bounded. The BUILD is linear in the
     // corpus end to end (the r11 verdict's one weak grade, closed):
@@ -1641,19 +1654,17 @@ object Clustering {
         // routing layers + long edges come from [[navGraphBuild]] —
         // every stage corpus-linear, the one broadcast constant-K.
         // The navigable graph is the INDEX ARTIFACT a deployment
-        // persists (staged once per input dir): without it every hop
-        // re-derived the hub layer per reference, and the 5-hop
-        // lineage doubled per hop (measured 15 s at sf0.1; staged +
-        // checkpointed beams: ~1 s). Wiring is the shared
-        // [[navServing]] (probes = vec_id < NavProbes).
+        // persists (staged once per input dir, with its routing
+        // layers [[navLayers]]): without it every hop re-derived the
+        // hub layer. Wiring is the shared [[navServing]] (probes =
+        // vec_id < NavProbes).
         val (nodesP, g, probes, entries) = navServing(s, dir)
         val w = Window.partitionBy(col("probe_id"))
           .orderBy(col("sim").desc, col("vec_id"))
         // the candidate/beam side is P·B·deg-bounded at ANY corpus
-        // size — broadcasting the frontier against the big node table
-        // is the scale-correct serving lookup (initial-plan-asserted:
-        // no SortMergeJoin anywhere in the walk); the walk itself is
-        // [[beamWalkScored]], shared with q176/q177/q179/q181/q182
+        // size, so it is driver state, never a join side; the walk
+        // itself is [[beamWalkScored]], shared with
+        // q176/q177/q179/q181/q182
         val found = beamWalkScored(nodesP, g, probes, entries, b, hops)
           .withColumn("rank", row_number().over(w).cast("long"))
           .filter(col("rank") <= 8)
@@ -1785,9 +1796,9 @@ object Clustering {
         // = the probe's lowest-id BASE cluster-mate, the frozen-
         // quantizer cell; routing hubs/supers = base) — a maintenance
         // cycle never re-derives routing from the delta
-        val probesF = delta.filter(col("vec_id") < p)
+        val probesF = onDriver(delta.filter(col("vec_id") < p)
           .select(col("vec_id").as("probe_id"), col("fcid").as("p_fcid"),
-            col("embedding").as("p_emb"), col("nsq").as("p_nsq"))
+            col("embedding").as("p_emb"), col("nsq").as("p_nsq")))
         val probes = probesF.select(col("probe_id"), col("p_emb"), col("p_nsq"))
         val entries = routedEntries(probesF, baseM, bHub, bSH)
         val w = Window.partitionBy(col("probe_id"))
@@ -1867,12 +1878,12 @@ object Clustering {
         // post-delete serving quality is measured from the population
         // that still searches. Entries route over the FULL layers —
         // tombstoned hubs stay routable waypoints, q177's whole point.
-        val probesF = nodes.filter(col("vec_id") < p && col("vec_id") % 7 =!= 3)
+        val probesF = onDriver(nodes.filter(col("vec_id") < p && col("vec_id") % 7 =!= 3)
           .select(col("vec_id").as("probe_id"), col("fcid").as("p_fcid"),
-            col("embedding").as("p_emb"), col("nsq").as("p_nsq"))
+            col("embedding").as("p_emb"), col("nsq").as("p_nsq")))
         val probes = probesF.select(col("probe_id"), col("p_emb"), col("p_nsq"))
-        val entries = routedEntries(probesF, nodes,
-          hubTable(nodes), superHubTable(hubRankTable(nodes)))
+        val (hubs, supers) = navLayers(s, dir)
+        val entries = routedEntries(probesF, nodes, hubs, supers)
         val w = Window.partitionBy(col("probe_id"))
           .orderBy(col("sim").desc, col("vec_id"))
         // the mask: applied AFTER the walk (tombstoned nodes routed
@@ -1974,9 +1985,9 @@ object Clustering {
     // harness, different physical index).
     //
     // Scale shape: inherits q174's serving contract (P·B·deg-bounded
-    // broadcast frontier against the key-partitioned compacted
-    // adjacency, corpus never rescanned, hops plan-unrolled) on top
-    // of [[compactedGraph]]'s linear build.
+    // driver-held beam, two filtered scans of the compacted adjacency
+    // and the live corpus per hop) on top of [[compactedGraph]]'s
+    // linear build.
     QueryDef(
       "q179_ann_graph_compacted_serve",
       (s, dir) => {
@@ -1992,15 +2003,16 @@ object Clustering {
         // edge endpoint is live, so nothing narrower can be reached
         val liveM = nodes.filter(col("vec_id") % 7 =!= 3)
         val live = liveM.select(col("vec_id"), col("embedding"), col("nsq"))
-        val probesF = liveM.filter(col("vec_id") < p)
+        val probesF = onDriver(liveM.filter(col("vec_id") < p)
           .select(col("vec_id").as("probe_id"), col("fcid").as("p_fcid"),
-            col("embedding").as("p_emb"), col("nsq").as("p_nsq"))
+            col("embedding").as("p_emb"), col("nsq").as("p_nsq")))
         val probes = probesF.select(col("probe_id"), col("p_emb"), col("p_nsq"))
         // entries route over the SURVIVING layers only — a deleted
         // hub/super-hub is physically gone from the compacted graph
+        val (hubs, supers) = navLayers(s, dir)
         val entries = routedEntries(probesF, liveM,
-          hubTable(nodes).filter(col("vec_id") % 7 =!= 3),
-          superHubTable(hubRankTable(nodes)).filter(col("vec_id") % 7 =!= 3))
+          hubs.filter(col("vec_id") % 7 =!= 3),
+          supers.filter(col("vec_id") % 7 =!= 3))
         val w = Window.partitionBy(col("probe_id"))
           .orderBy(col("sim").desc, col("vec_id"))
         val found = beamWalkScored(live, g, probes, entries, b, hops)
@@ -2104,24 +2116,16 @@ object Clustering {
       "q181_ann_graph_reinserted_serve",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val (p, b, hops, k) = (8, 16, 5, 20)
+        val (b, hops) = (16, 5)
+        // the whole corpus is live again after re-insertion, so probes
+        // (vec_id < 8) and entries routed over the FULL layers are
+        // q174's own ([[navServing]] — re-inserted hubs are reachable
+        // nodes once more); only the walked graph differs
+        val (nodesP, g0, probes, entries) = navServing(s, dir)
         val nodes = hierMembers(s, dir)
           .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-        val g0 = graft.operators.Staged.parquet(s, s"q174graph|$dir") {
-          navGraphBuild(nodes, knnRanked(s, dir).select(col("va"), col("vb")))
-        }
         val g = recompletedGraph(s, dir, nodes, g0)
           .select(col("va"), col("vb"))
-        val nodesP = nodes.select(col("vec_id"), col("embedding"), col("nsq"))
-        // the whole corpus is live again after re-insertion, so
-        // entries route over the FULL layers (re-inserted hubs are
-        // reachable nodes once more)
-        val probesF = nodes.filter(col("vec_id") < p)
-          .select(col("vec_id").as("probe_id"), col("fcid").as("p_fcid"),
-            col("embedding").as("p_emb"), col("nsq").as("p_nsq"))
-        val probes = probesF.select(col("probe_id"), col("p_emb"), col("p_nsq"))
-        val entries = routedEntries(probesF, nodes,
-          hubTable(nodes), superHubTable(hubRankTable(nodes)))
         val w = Window.partitionBy(col("probe_id"))
           .orderBy(col("sim").desc, col("vec_id"))
         val found = beamWalkScored(nodesP, g, probes, entries, b, hops)
@@ -2186,61 +2190,19 @@ object Clustering {
     // cross-engine walk proofs in one query.
     //
     // Scale shape: three q174 serving walks over one staged graph —
-    // each P·B·deg-bounded, corpus never rescanned; the exact harness
-    // is computed ONCE and shared across beams.
+    // each P·B·deg-bounded; the exact harness is staged once and
+    // shared across beams.
     QueryDef(
       "q182_ann_graph_beam_sweep",
-      (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
-        val hops = 5
-        val (nodesP, g, probes, entries) = navServing(s, dir)
-        val w = Window.partitionBy(col("probe_id"))
-          .orderBy(col("sim").desc, col("vec_id"))
-        // exact harness: the staged [[navExact20]], shared with q174
-        // (identical corpus, probes, cosine, and rank cut).
-        val exact = navExact20(s, dir)
-        // r16 optimization (guide §2.6, overlap independent jobs): the
-        // three walks share nothing but read-only inputs and each hop
-        // is an EAGER localCheckpoint, so a sequential map serializes
-        // 15 tiny beam jobs on a 32-slot executor. Constructing the
-        // three branches from a small thread pool lets each walk's
-        // hops back-fill the slots the others leave idle; the final
-        // DataFrame (union of the three scored branches) is identical.
-        // entries is checkpointed ONCE up front so the walks' init
-        // checkpoints re-read it instead of re-deriving routedEntries
-        // per walk.
-        val entriesCk = graft.operators.Lineage.cut(entries)
-        // r17 (VERDICT r16 #8): DEDICATED fixed pool + finite await —
-        // the r16 version ran the walks on the global ExecutionContext
-        // with Await.result(Duration.Inf), so a hung Spark job would
-        // hang the query forever and block a shared pool thread. Three
-        // threads (one per walk), a 30-minute ceiling (the walks take
-        // seconds at any benched scale; the ceiling exists to turn a
-        // wedged job into an error instead of a silent hang), and the
-        // pool is torn down whatever happens.
-        val perBeam = {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.DurationInt
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          try {
-            Await.result(Future.sequence(Seq(4, 8, 16).map { b => Future {
-              beamWalkScored(nodesP, g, probes, entriesCk, b, hops)
-                .withColumn("rank", row_number().over(w))
-                .filter(col("rank") <= 8)
-                .join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
-                .agg(count(lit(1)).as("n_results"),
-                  sum(coalesce(col("hit"), lit(0))).cast("long").as("hits"))
-                .select(lit(b.toLong).as("beam"), col("n_results"), col("hits"))
-            } }), 30.minutes)
-          } finally pool.shutdown()
-        }
-        perBeam.reduce(_.unionByName(_))
+      (s, dir) =>
+        // [[beamSweep]]: the q174 walk at each width over the shared
+        // [[navServing]] wiring, probes and entries collected once,
+        // each walk's top-8 scored against the staged [[navExact20]]
+        beamSweep(s, dir, Seq(4, 8, 16))
           .select(col("beam"), col("n_results"), col("hits"),
             Num.fround(col("hits").cast("double") / col("n_results"), 4)
               .as("precision"))
-          .orderBy(col("beam"))
-      },
+          .orderBy(col("beam")),
       Some {
         val (p, hops, k) = (8, 5, 20)
         val simOf = Num.froundSql(

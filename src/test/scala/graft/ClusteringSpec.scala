@@ -437,6 +437,120 @@ class ClusteringSpec extends SparkSuite {
       s"beam 16 (${hitsBy(16L)}) worse than beam 4 (${hitsBy(4L)})")
   }
 
+  /** The r16 window form of the walk's beam cut (`lag` run boundary +
+    * `dense_rank` top-b over `sim DESC, vec_id`) — the reference the
+    * driver-side [[graft.queries.Clustering.beamCut]] must reproduce
+    * row for row. */
+  private def windowCut(scored: org.apache.spark.sql.DataFrame, b: Int) = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id"))
+    val wSim = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc)
+    scored
+      .withColumn("du", lag(col("sim"), 1).over(w))
+      .withColumn("rk", dense_rank().over(wSim))
+      .filter(!(col("du") <=> col("sim")) && col("rk") <= b)
+      .select(col("probe_id"), col("vec_id"), col("sim"))
+  }
+
+  private def cutKeys(rows: Seq[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getLong(0), r.getLong(1),
+      if (r.isNullAt(2)) None else Some(r.getDouble(2).toString))).toSet
+
+  /** A duplicate-heavy synthetic corpus: ids 1-5 are exact copies of
+    * one vector (a tie group wider than the beam), 6-8 and 13-14 two
+    * smaller copy groups, 9 the zero-norm vector (sim 0 by the cosine
+    * guard, tied with the orthogonal 10), 11 the antipode; probes 100
+    * and 101. Returns (nodesP, probes). */
+  private def tiedCorpus() = {
+    import spark.implicits._
+    graft.functions.DotProductF.register(spark)
+    val a = Array(1f, 0f, 0f, 0f)
+    val vecs = Seq.fill(5)(a) ++ Seq.fill(3)(Array(0.6f, 0.8f, 0f, 0f)) ++
+      Seq(Array(0f, 0f, 0f, 0f), Array(0f, 0f, 1f, 0f), Array(-1f, 0f, 0f, 0f),
+        Array(0.2f, 0.1f, 0.3f, 0.9f)) ++ Seq.fill(2)(Array(0.8f, 0.6f, 0f, 0f))
+    val nodesP = vecs.zipWithIndex.map { case (v, i) => (i + 1L, v) }
+      .toDF("vec_id", "embedding")
+      .withColumn("nsq", graft.functions.VectorFns.normSqF("embedding"))
+    val probes = Seq((100L, a), (101L, Array(0f, 1f, 0f, 0f))).toDF("probe_id", "p_emb")
+      .withColumn("p_nsq", graft.functions.VectorFns.normSqF("p_emb"))
+    (nodesP, probes)
+  }
+
+  private val walkSim = graft.functions.Num.fround(
+    graft.functions.VectorFns.cosine(graft.functions.VectorFns.dotF("p_emb", "embedding"),
+      col("p_nsq"), col("nsq")), 4)
+
+  test("beam cut: one minimum-vec_id row per sim level, top b levels, window-form reference") {
+    val (nodesP, probes) = tiedCorpus()
+    val scored = nodesP.crossJoin(probes)
+      .select(col("probe_id"), col("vec_id"), walkSim.as("sim"))
+    val rows = scored.collect().toSeq
+    val b = 2
+    val cut = graft.queries.Clustering.beamCut(rows, b)
+    // the laws, per probe: the top b DISTINCT sims, each kept once, by
+    // its minimum vec_id (probe 100's best level is the 5-copy group)
+    val expected = rows.groupBy(_.getLong(0)).toSeq.flatMap { case (p, rs) =>
+      rs.groupBy(_.getDouble(2)).toSeq.sortBy(-_._1).take(b).map { case (sm, lv) =>
+        (p, lv.map(_.getLong(1)).min, Some(sm.toString))
+      }
+    }.toSet
+    assert(cutKeys(cut) == expected, s"cut ${cutKeys(cut)} vs laws $expected")
+    assert(cut.count(_.getLong(0) == 100L) == b &&
+      cut.exists(r => r.getLong(0) == 100L && r.getLong(1) == 1L && r.getDouble(2) == 1.0))
+    assert(cutKeys(cut) == cutKeys(windowCut(scored, b).collect().toSeq))
+    // the zero-norm / orthogonal tie at sim 0 collapses to one row too
+    val wide = graft.queries.Clustering.beamCut(rows, 16)
+    assert(wide.filter(r => r.getLong(0) == 101L && r.getDouble(2) == 0.0)
+      .map(_.getLong(1)) == Seq(1L))
+    assert(cutKeys(wide) == cutKeys(windowCut(scored, 16).collect().toSeq))
+    // Spark's DESC order at the edges: NaN first, nulls last, 0.0 and
+    // -0.0 one level
+    import spark.implicits._
+    val edge = Seq[(Long, Long, Option[Double])](
+      (1L, 7L, Some(Double.NaN)), (1L, 3L, Some(Double.NaN)), (1L, 4L, None),
+      (1L, 2L, None), (1L, 9L, Some(0.0)), (1L, 5L, Some(-0.0)),
+      (1L, 6L, Some(0.5)), (1L, 8L, Some(0.5)), (1L, 1L, Some(-1.0)),
+      (2L, 3L, None), (2L, 1L, Some(0.25))).toDF("probe_id", "vec_id", "sim")
+    Seq(1, 2, 3, 6).foreach { bb =>
+      assert(cutKeys(graft.queries.Clustering.beamCut(edge.collect().toSeq, bb)) ==
+        cutKeys(windowCut(edge, bb).collect().toSeq), s"b=$bb")
+    }
+  }
+
+  test("driver-held beam walk equals the window-form walk on a duplicate-heavy graph") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.broadcast
+    val (nodesP, probes) = tiedCorpus()
+    // from the antipode entry (11) the walk climbs 12 -> 6/7/14 -> the
+    // 5-copy group, meeting sim ties at every hop; 99 is not a vector
+    val g = Seq((11L, 9L), (11L, 10L), (11L, 12L), (9L, 10L), (10L, 12L),
+      (12L, 6L), (12L, 7L), (12L, 14L), (6L, 1L), (6L, 8L), (7L, 4L),
+      (14L, 13L), (14L, 3L), (13L, 2L), (1L, 5L), (2L, 3L), (3L, 11L),
+      (4L, 5L), (5L, 12L), (8L, 9L), (99L, 1L), (10L, 99L)).toDF("va", "vb")
+    val entries = Seq((100L, 11L), (100L, 9L), (101L, 11L), (101L, 100L)).toDF("probe_id", "vec_id")
+    def score(cand: org.apache.spark.sql.DataFrame) = nodesP
+      .join(broadcast(cand), Seq("vec_id"))
+      .join(broadcast(probes), Seq("probe_id"))
+      .select(col("probe_id"), col("vec_id"), walkSim.as("sim"))
+    Seq((2, 3), (3, 4), (16, 3)).foreach { case (b, hops) =>
+      var beam = entries.filter(col("vec_id") =!= col("probe_id")).localCheckpoint(true)
+      for (_ <- 1 to hops) {
+        val expanded = g.join(beam, beam("vec_id") === g("va"))
+          .select(col("probe_id"), col("vb").as("vec_id"))
+        beam = windowCut(score(beam.unionByName(expanded)
+            .filter(col("vec_id") =!= col("probe_id"))), b)
+          .select(col("probe_id"), col("vec_id")).localCheckpoint(true)
+      }
+      val ref = cutKeys(score(beam).collect().toSeq)
+      val got = cutKeys(graft.queries.Clustering
+        .beamWalkScored(nodesP, g, probes, entries, b, hops).collect().toSeq)
+      assert(got == ref, s"b=$b hops=$hops: walk $got vs reference $ref")
+      // non-vacuous: the walk left its entries and reached the copies
+      assert(got.contains((100L, 1L, Some("1.0"))), s"b=$b hops=$hops: $got")
+      assert(got.exists(_._1 == 101L))
+    }
+  }
+
   test("q183 bitext mining matches an independent driver-side reimplementation") {
     val sfDir = "/root/testdata/sf0.001"
     val out = SparkEntry.queries("q183_bitext_margin_mining")(spark, sfDir)

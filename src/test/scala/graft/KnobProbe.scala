@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * restores the base-SF hit band once the corpus grows 10× — the
   * q182 beam sweep and the q191 oversampling sweep, both extended
   * PAST their registered widths via the parametric probe hooks
-  * (`Clustering.beamSweepProbe` / `Vectors.bqSweepProbe`), at the
+  * (`Clustering.beamSweep` / `Vectors.bqSweepProbe`), at the
   * base dir and at the `make_scale.py` replica.
   *
   * Measured (round 14) — the knob story splits by HOW the corpus
@@ -55,12 +55,12 @@ object KnobProbe {
       df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
     val out = Seq(base, scaled).map { dir =>
-      val bm = rows(queries.Clustering.beamSweepProbe(spark, dir, beams))
+      val bm = rows(queries.Clustering.beamSweep(spark, dir, beams))
       bm.foreach { case (b, n, h) =>
         println(s"""BEAM {"dir":"$dir","hops":5,"beam":$b,"n_results":$n,"hits":$h}""")
       }
       hopsSweep.foreach { hp =>
-        rows(queries.Clustering.beamSweepProbe(spark, dir, Seq(16, 64), hops = hp))
+        rows(queries.Clustering.beamSweep(spark, dir, Seq(16, 64), hops = hp))
           .foreach { case (b, n, h) =>
             println(s"""BEAM {"dir":"$dir","hops":$hp,"beam":$b,"n_results":$n,"hits":$h}""")
           }

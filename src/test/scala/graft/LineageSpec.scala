@@ -3,8 +3,8 @@ package graft
 /** The fault-tolerance knob on the engine's lineage cuts (VERDICT r16
   * #7): `Lineage.cut` defaults to eager `localCheckpoint` (fast,
   * non-replicated — executor loss on a cluster fails the job), and
-  * `spark.graft.checkpoint.reliable=true` switches every cut — beam
-  * hops, NN-Descent rounds, connected-component rounds — to reliable
+  * `spark.graft.checkpoint.reliable=true` switches every cut —
+  * NN-Descent rounds, connected-component rounds — to reliable
   * `checkpoint()` (blocks re-readable from the checkpoint dir). The
   * knob must (a) produce identical results and (b) actually write
   * reliable checkpoint data.

@@ -22,14 +22,7 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      // "=beamHop": the pre-checkpoint per-hop plan of the graph
-      // serving walk (a query's FINAL plan starts at the last
-      // localCheckpoint and hides the hop shape the family's cost is
-      // made of).
-      val df =
-        if (name == "=beamHop") queries.Clustering.beamHopPlan(spark, sfDir)
-        else SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
       println(s"wrote $outDir/${name}_$suffix.txt")

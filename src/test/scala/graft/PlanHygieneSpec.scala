@@ -113,32 +113,41 @@ class PlanHygieneSpec extends SparkSuite {
       s"anti-patterns outside the allowlist:\n${offenders.mkString("\n")}")
   }
 
-  // --- r17 guards for the r16 optimization wins (VERDICT r16 #6):
-  // a refactor that silently regresses either headline plan shape must
-  // fail the suite, not wait for the next bench read. ---
+  // --- guards for the optimization wins (VERDICT r16 #6): a refactor
+  // that silently regresses a headline plan shape must fail the
+  // suite, not wait for the next bench read. ---
 
-  test("beam hop rides ONE shuffle exchange (r16 win: 3 exchanges/hop -> 1)") {
-    // Synthetic checkpointed inputs isolate the HOP plan (a walk
-    // query's final plan starts at the last lineage cut and hides it):
-    // the hop's two ranking cuts — the lag run-boundary window and the
-    // dense_rank top-b window — must share one hash(probe_id)
-    // exchange, and the frontier/scoring joins must stay broadcast.
-    graft.functions.DotProductF.register(spark)
-    import spark.implicits._
-    val nodesP = Seq(
-      (1L, Array(1.0f, 0.0f), 1.0), (2L, Array(0.9f, 0.1f), 0.82),
-      (3L, Array(0.0f, 1.0f), 1.0), (4L, Array(0.5f, 0.5f), 0.5))
-      .toDF("vec_id", "embedding", "nsq").localCheckpoint(true)
-    val g = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))
-      .toDF("va", "vb").localCheckpoint(true)
-    val probes = Seq((9L, Array(1.0f, 0.0f), 1.0))
-      .toDF("probe_id", "p_emb", "p_nsq").localCheckpoint(true)
-    val beam = Seq((9L, 1L)).toDF("probe_id", "vec_id").localCheckpoint(true)
-    val plan = graft.queries.Clustering.beamHop(nodesP, g, probes, beam, 4)
-      .queryExecution.executedPlan.toString
-    val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(shuffles == 1,
-      s"beam hop regressed to $shuffles shuffle exchanges (expected 1):\n$plan")
+  test("q174 walk hops run at most 2 map-only jobs each (driver-held beam)") {
+    // The walk's bounded state lives on the driver: a hop scans the
+    // beam's adjacency rows and the new candidates' payloads — two
+    // single-stage jobs, no shuffle — and scoring folds on the driver.
+    // The probes are driver-held already and the entries are brought
+    // to the driver first, so every job the walk runs below is a hop
+    // job.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.queries.Clustering
+    val (nodesP, g, probes, routed) = Clustering.navServing(spark, sfDir)
+    val entries = Clustering.onDriver(routed)
+    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        stagesPerJob.add(e.stageInfos.size): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try Seq(1, 5).foreach { hops =>
+      stagesPerJob.clear()
+      Clustering.beamWalkScored(nodesP, g, probes, entries, 16, hops)
+        .collect(): Unit
+      org.apache.spark.ListenerBusDrain(sc)
+      val jobs = stagesPerJob.asScala.toSeq
+      assert(jobs.size >= hops && jobs.size <= 2 * hops,
+        s"$hops-hop walk ran ${jobs.size} jobs (expected $hops..${2 * hops})")
+      assert(jobs.forall(_ == 1),
+        s"$hops-hop walk ran a multi-stage (shuffle) job: stages per job $jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("q197 pair scoring stays dense (r17 batch-3 win guard)") {
