@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.json4s.{JDecimal, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.compact
 
 /** Driver-run benchmark: a full JSON line with per-query wall-clock
   * over SPARK_GRAFT_SF_DIR, then a compact summary line LAST (the
@@ -37,11 +39,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // The pinned session config lives in BenchSession (shared with the
-    // plan/timing tooling so dumped shapes match benched ones, ADVICE
-    // r16) — config-for-config identical to what was inline here.
-    val spark = BenchSession.create(cpus)
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("WARN")
 
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
@@ -55,48 +53,9 @@ object Bench {
     val maxRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     // Don't let repetition blow the wall-clock budget in a slow
     // environment: further passes run only while cumulative bench time
-    // stays under this bound (first pass always runs). Default 420:
-    // the round-5 driver artifact showed pass 1 alone consuming the
-    // old 240 s bound in the driver environment (133.6 s of measured
-    // query time + ~105 s of GC/scheduling overhead — wall_sec in the
-    // JSON now makes that split visible), which left the headline
-    // total min-of-ONE every round. 420 s admits a complete warm
-    // second pass there (~150 s — staged artifacts make pass 2 cheap)
-    // while the per-query gate below still cuts an overrunning pass
-    // at the bound. Round-7 continuation: default raised 420 → 480 —
-    // the suite gained five queries whose pass-1 cost includes staged
-    // builds (q122's pair graph ~13 s, q119's weight table ~8 s at
-    // sf0.1), so pass 1 grew ~25 s while pass 2 (staged reads) grew
-    // only ~4 s; 480 keeps a complete warm second pass inside the
-    // budget in the driver environment. Second continuation: 480 →
-    // 540 for the eight q125–q132 additions (pass-1 cold cost ~25 s —
-    // BPE staged training, CMS/PCA codegen warmup — pass-2 warm cost
-    // ~7 s). Third continuation: 540 → 600 for the nine q133–q141
-    // learned-curation additions (pass-1 cold ~12 s incl. the staged
-    // bigram-LM score and the GD/propagation multi-job queries;
-    // pass-2 warm ~7 s). Round 8: 600 → 660 for the seven q156–q162
-    // additions (pass-1 cold ~10 s — the cell-partitioned IVF index
-    // stages of q103/q154/q162 and q158's 4-dim brute melt; pass-2
-    // warm ~5 s). Round 15: 660 → 780 — the registry grew 166 → 200
-    // across rounds 10–15 while the budget stayed at 660, and the r14
-    // driver artifact showed pass 1 alone consuming 617 s of it at
-    // 198 queries (pass 2 was grace-only); 780 re-admits a complete
-    // warm second pass at 200 queries (builder-measured: pass 1
-    // ~330 s + pass 2 ~200 s on a quiet box; the driver environment
-    // historically runs ~1.8× that, and the grace window scales with
-    // the budget too).
-    // Round 17 (VERDICT r16 #1): the fixed 780 default was sized for
-    // the builder's box at 200 queries; the r16 driver environment ran
-    // ~1.3× slower and its 32-core protocol run hit the bound mid-pass-2
-    // (runs=1, warm_covered 140/202 — the headline total mixed ~60 s of
-    // first-touch stage builds into single-shot numbers and poisoned
-    // the scaling ratios). The default now SCALES WITH THE REGISTRY
-    // (6 s/query, floored at the historical 780): at 202 queries that
-    // is 1212 s, which covers the driver's measured pass-1 (~560 s) +
-    // pass-2 (~260 s over 202) + streaming (~45 s) with headroom, and
-    // keeps growing if the registry ever does. An explicit
-    // SPARK_GRAFT_BENCH_BUDGET_SEC still overrides. Timing methodology
-    // (noop sink, min-of-runs, slowest-first pass 2) is unchanged.
+    // stays under this bound (first pass always runs). The default
+    // scales with the registry, max(780, 6 s x queries), so a complete
+    // warm second pass fits; SPARK_GRAFT_BENCH_BUDGET_SEC overrides.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Optional subset (the Verify convention): extra args = bench only
     // these queries; unknown names fail loudly.
@@ -287,31 +246,10 @@ object Bench {
     // because the driver captures the TAIL of the output — the
     // wall-time map goes LAST so truncation from the front can never
     // eat it (round 3 lost the per-query times that way).
-    def r3(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, (v, _)) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val gcs = results.map { case (k, (_, g)) => "\"" + k + "\":" + r3(g) }
-      .mkString("{", ",", "}")
-    // e.toString carries arbitrary message text — escape it so the
-    // JSON line always parses (quotes, backslashes, control chars).
-    def jstr(v: String): String = v.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => "\\u%04x".format(c.toInt)
-      case c             => c.toString
-    }
-    val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + jstr(v) + "\"" }
-      .mkString("{", ",", "}")
-    val rpq = samples.map { case (k, ss) => "\"" + k + "\":" + ss.size }
-      .mkString("{", ",", "}")
-    // rows/sec per streaming path (VERDICT r10 #5) and per-stage build
-    // seconds (#6: stage builds are engine work the min-of-runs
-    // per-query numbers exclude — this map itemizes the wall/total gap).
-    val strm = streaming.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val stages = graft.operators.Staged.buildTimings.toSeq.sortBy(-_._2)
-      .map { case (k, v) => "\"" + jstr(k) + "\":" + r3(v) }
-      .mkString("{", ",", "}")
+    def r3(v: Double): JValue =
+      JDecimal(BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP))
+    def obj[V](kvs: Iterable[(String, V)])(f: V => JValue): JObject =
+      JObject(kvs.map { case (k, v) => k -> f(v) }.toList)
     val total = results.map(_._2._1).filter(_ >= 0).sum
     // Pinned scaled-bench protocol (round 15): the 100× total swung
     // +64% between r13 and r14 purely on accounting (RUNS=1 folds
@@ -334,11 +272,25 @@ object Bench {
       val later = samples(name).drop(1).map(_._1).filter(_ >= 0)
       if (later.isEmpty) None else Some(later.min)
     }
-    val warmCovered = warmMins.count(_.isDefined)
-    val warmServeTotal = warmMins.flatten.sum
-    val coldStageTotal = graft.operators.Staged.buildTimings.values.sum
-    val protoFields = s""""cold_stage_total":${r3(coldStageTotal)},"warm_serve_total":${r3(warmServeTotal)},"warm_covered":$warmCovered"""
-    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","runs":$runs,"wall_sec":${r3(spentSec)},"n_errors":${errors.size},$protoFields,"errors":$errs,"streaming":$strm,"stage_build_sec":$stages,"runs_per_query":$rpq,"gc_sec":$gcs,"queries":$qs}"""
+    val stageTimings = graft.operators.Staged.buildTimings.toSeq.sortBy(-_._2)
+    val head = List(
+      "metric" -> JString("total"), "value" -> r3(total), "unit" -> JString("sec"),
+      "sf" -> JString(sfDir), "runs" -> JInt(runs), "wall_sec" -> r3(spentSec),
+      "n_errors" -> JInt(errors.size),
+      "cold_stage_total" -> r3(stageTimings.map(_._2).sum),
+      "warm_serve_total" -> r3(warmMins.flatten.sum),
+      "warm_covered" -> JInt(warmMins.count(_.isDefined)))
+    // streaming: rows/sec per streaming path (VERDICT r10 #5);
+    // stage_build_sec: per-stage build seconds (#6: stage builds are
+    // engine work the min-of-runs per-query numbers exclude — this map
+    // itemizes the wall/total gap).
+    val full = compact(JObject(head ++ List(
+      "errors" -> obj(errors)(JString(_)),
+      "streaming" -> obj(streaming)(r3),
+      "stage_build_sec" -> obj(stageTimings)(r3),
+      "runs_per_query" -> obj(samples)(ss => JInt(ss.size)),
+      "gc_sec" -> obj(results) { case (_, g) => r3(g) },
+      "queries" -> obj(results) { case (v, _) => r3(v) })))
     println(full)
     // The driver snapshot keeps only a stdout TAIL, which amputated
     // the per-query map from the r11 artifact — so the LOSSLESS line
@@ -350,9 +302,6 @@ object Bench {
       (full + "\n").getBytes("UTF-8")): Unit
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"bench: could not write $outPath: $e") }
-    val top10 = results.sortBy { case (_, (v, _)) => -v }.take(10)
-      .map { case (k, (v, _)) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
     // Round 17 (VERDICT r16 #2): the compact line no longer carries the
     // full stage_build_sec map — at 100+ stages with dir-qualified keys
     // it had grown past ~4.5 KB, and the driver's stdout TAIL capture
@@ -364,10 +313,11 @@ object Bench {
     // compact line as cold_stage_total. Only the top-8 stages ride
     // along (dir suffix stripped) so the tail alone still names the
     // heavy builds.
-    val stagesTop = graft.operators.Staged.buildTimings.toSeq.sortBy(-_._2).take(8)
-      .map { case (k, v) => "\"" + jstr(k.replace("|" + sfDir, "")) + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","runs":$runs,"wall_sec":${r3(spentSec)},"n_errors":${errors.size},$protoFields,"top10":$top10,"streaming":$strm,"stage_top8_sec":$stagesTop}""")
+    println(compact(JObject(head ++ List(
+      "top10" -> obj(results.sortBy(-_._2._1).take(10)) { case (v, _) => r3(v) },
+      "streaming" -> obj(streaming)(r3),
+      "stage_top8_sec" -> obj(stageTimings.take(8)
+        .map { case (k, v) => k.replace("|" + sfDir, "") -> v })(r3)))))
     spark.stop()
   }
 }

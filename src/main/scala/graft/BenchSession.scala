@@ -2,13 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** ONE definition of the bench-shaped local session, shared by
-  * [[Bench]] and the plan/timing tooling (PlanDump / PlanProbe /
-  * TimeProbe). ADVICE r16: the tooling previously duplicated these
-  * configs inline, so a change to the pinned bench session would have
-  * silently diverged the dumped plan shapes from the benched ones.
+/** The ONE place a SparkSession is built: Bench, Verify, the test
+  * suites (SparkSuite) and the dev probes (PlanDump, TimeProbe,
+  * ScaleProbe, BuildProbe, KnobProbe) all take their session from
+  * here, so the config the specs run under is the config the bench
+  * measures and the plans are dumped from.
   */
 object BenchSession {
+  /** The pinned session at `SPARK_GRAFT_CPUS` local slots, defaulting
+    * to the machine's processor count. */
+  def create(): SparkSession =
+    create(sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString))
+
   /** Build the pinned session at `cpus` local slots (shuffle
     * partitions = slots, the bench convention). */
   def create(cpus: String): SparkSession =

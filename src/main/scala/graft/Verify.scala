@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,27 +13,7 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ObjectHashAggregate (min_by/collect over struct buffers) falls
-      // back to SORT-based aggregation after 128 distinct keys per
-      // partition by default — pathological for high-cardinality
-      // entity-resolution aggregates (sorts every candidate). 64k keys
-      // x ~1KB buffers caps the map at ~64MB/partition: hash stays hash.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // AQE's partition coalescing is byte-driven (parallelismFirst is
-      // still floored by minPartitionSize = 1MB), so a CPU-dense
-      // small-byte shuffle — candidate-pair scoring, md5 explodes —
-      // coalesces to a handful of tasks and serializes on a 32-core
-      // executor (q34 ran its whole tail on 4 of 32 slots). A 64k
-      // floor keeps small hot shuffles at full parallelism and is
-      // invisible at scale, where partitions are GB-sized.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -49,20 +30,8 @@ object Verify {
       // Bench's per-query clear).
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = compact(JObject(
+      SparkEntry.oracleSql.toList.map { case (k, v) => k -> JString(v) }))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

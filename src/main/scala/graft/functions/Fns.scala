@@ -314,36 +314,21 @@ object VectorFns {
   private def hpWeights(j: Int): Array[Double] =
     (0 until MaxHyperplaneDim).map(i => hpWeight(j, i)).toArray
 
-  /** Signed projection onto deterministic hyperplane j (HOF form for
-    * bounded contexts; the corpus path is [[hyperplaneProjections]]). */
-  def hyperplaneDot(embCol: String, j: Int): Column = {
-    val ws = hpWeights(j).mkString("array(", "D, ", "D)")
-    expr(s"aggregate(sequence(0, size($embCol) - 1), 0D, " +
-      s"(acc, i) -> acc + CAST(element_at($embCol, i + 1) AS DOUBLE) * element_at($ws, i + 1))")
-  }
-
   def hyperplaneDotSql(emb: String, j: Int): String =
     s"list_sum([$emb[i] * (('0x' || substr(md5('hp|' || $j || '|' || (i - 1)), 1, 4))::INT - 32768) for i in generate_series(1, len($emb))])"
 
-  /** LSH bucket id from `nBits` hyperplane sign bits. At 100 TB this is
-    * the blocking key that turns an O(n²) similarity join into a
-    * per-bucket join (SURVEY.md §7.4: never full cross-join at scale). */
-  def lshBucket(embCol: String, nBits: Int): Column =
-    lshBucketRange(embCol, 0, nBits)
-
+  /** DuckDB LSH bucket id from `nBits` hyperplane sign bits. At 100 TB
+    * this is the blocking key that turns an O(n²) similarity join into
+    * a per-bucket join (SURVEY.md §7.4: never full cross-join at
+    * scale); the engine side is [[bucketFromProjections]]. */
   def lshBucketSql(emb: String, nBits: Int): String =
     lshBucketRangeSql(emb, 0, nBits)
 
-  /** LSH bucket id from hyperplanes [firstPlane, firstPlane + nBits).
-    * Disjoint plane ranges give INDEPENDENT band keys (the q33 band
-    * pattern for bit-LSH): each band has 2^nBits buckets, candidates
-    * are unioned across bands, and recall per band is
+  /** DuckDB LSH bucket id from hyperplanes [firstPlane, firstPlane +
+    * nBits). Disjoint plane ranges give INDEPENDENT band keys (the q33
+    * band pattern for bit-LSH): each band has 2^nBits buckets,
+    * candidates are unioned across bands, and recall per band is
     * p_agree^nBits where p_agree = 1 - θ/π for angle θ. */
-  def lshBucketRange(embCol: String, firstPlane: Int, nBits: Int): Column =
-    (0 until nBits).map { j =>
-      when(hyperplaneDot(embCol, firstPlane + j) > 0, lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ + _)
-
   def lshBucketRangeSql(emb: String, firstPlane: Int, nBits: Int): String =
     (0 until nBits).map { j =>
       s"(CASE WHEN ${hyperplaneDotSql(emb, firstPlane + j)} > 0 THEN ${1 << j} ELSE 0 END)"
@@ -352,10 +337,10 @@ object VectorFns {
   /** Signed projections onto hyperplanes `planes` plus the squared
     * norm, for EVERY vector of `embeddings(vec_id, embedding)` — built
     * as posexplode → codegen'd arithmetic → one HashAggregate with
-    * fixed-width sum buffers. The higher-order-function form
-    * ([[hyperplaneDot]]) is CodegenFallback (interpreted, boxed per
-    * element), which is fine for a bounded set of verify pairs but not
-    * for scanning the whole corpus × 32 planes; this form stays inside
+    * fixed-width sum buffers. A higher-order-function form
+    * (aggregate over the coordinates) is CodegenFallback (interpreted,
+    * boxed per element), too slow for scanning the whole corpus × 32
+    * planes; this form stays inside
     * whole-stage codegen, and map-side partial aggregation means one
     * (1 + |planes|)-double row per vector reaches the shuffle.
     * Output: vec_id, nsq, d<j> for each plane j. */

@@ -40,7 +40,7 @@ object ConnectedComponents {
     * artifact. Labels are deterministic min-ids, so staging is
     * result-invisible (same oracle rows); serving becomes a plain
     * parquet scan — no eager actions, so the face is also
-    * plan-dumpable (graft.Explain) like any staged query.
+    * plan-dumpable like any staged query.
     *
     * @param edgeKey the stage key (or any deterministic identity) of
     *                the edge list — labeling identity follows edge

@@ -1229,13 +1229,6 @@ object Clustering {
   private def compactedGraph(s: SparkSession, dir: String,
       nodes: DataFrame, g: DataFrame): DataFrame =
     graft.operators.Staged.parquet(s, s"q178compact|$dir") {
-      compactBuild(nodes, g)
-    }
-
-  /** The UNSTAGED compaction transform [[compactedGraph]] stages —
-    * factored out so [[graft.Explain]] can dump the plan the
-    * q178compact stage WRITER runs (the staged read hides it). */
-  private[graft] def compactBuild(nodes: DataFrame, g: DataFrame): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       val kept = g.filter(col("va") % 7 =!= 3 && col("vb") % 7 =!= 3)
       val aToD = g.filter(col("va") % 7 =!= 3 && col("vb") % 7 === 3)
@@ -1260,17 +1253,6 @@ object Clustering {
       kept.withColumn("kind", lit("kept"))
         .unionByName(repair.withColumn("kind", lit("repair")))
     }
-
-  /** [[compactBuild]] wired to a dir's member table and staged q174
-    * graph — the one-call form [[graft.Explain]] dumps. */
-  private[graft] def compactBuildPlan(s: SparkSession, dir: String): DataFrame = {
-    val nodes = hierMembers(s, dir)
-      .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-    val g = graft.operators.Staged.parquet(s, s"q174graph|$dir") {
-      navGraphBuild(nodes, knnRanked(s, dir).select(col("va"), col("vb")))
-    }
-    compactBuild(nodes, g)
-  }
 
   /** DuckDB mirror of [[compactedGraph]] as CTEs (no leading WITH):
     * expects the full adjacency `adj(va, vb)` and the member table

@@ -89,8 +89,8 @@ object Domain {
   // evicted, and every reader gets the same column pruning at the
   // staged scan.
   /** The exact plan the stage writer runs — shared with PlanSpec's
-    * q24 BUILD test and Explain's stage-build dump so the pinned and
-    * dumped evidence can never drift from the real write path. */
+    * q24 BUILD test so the pinned evidence can never drift from the
+    * real write path. */
   private[graft] def silverBuild(s: SparkSession, dir: String): DataFrame =
     MatchTransform.silver(
       bronzeFromOrders(Tables.orders(s, dir)),

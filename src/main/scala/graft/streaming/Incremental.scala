@@ -72,8 +72,7 @@ object Incremental {
     * exactly because write time is monotone up to clock skew « 24 h.
     * Do NOT stamp business/event time from inside the payload (it can
     * predate the watermark by years); a backfill writer must either
-    * stamp backfill-run time or use a fresh checkpoint. The
-    * PipelineSmoke main demonstrates the failure mode. */
+    * stamp backfill-run time or use a fresh checkpoint. */
   def runOnce(
       spark: SparkSession,
       bronzeDir: String,

@@ -27,6 +27,18 @@ class AdaptiveSpec extends SparkSuite {
     }
   }
 
+  test("suite session carries BenchSession's pinned confs") {
+    // Specs must run under the session the bench measures: the AQE
+    // coalescing floor, the hash-aggregate fallback threshold, UTC and
+    // one shuffle partition per slot.
+    val c = spark.conf
+    assert(c.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k")
+    assert(c.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "65536")
+    assert(c.get("spark.sql.session.timeZone") == "UTC")
+    assert(c.get("spark.sql.shuffle.partitions").toInt ==
+      spark.sparkContext.defaultParallelism)
+  }
+
   test("runtime bloom filter: a selective dim filter injects might_contain into the fact scan side") {
     // A filtered build side makes Catalyst inject a bloom-filter
     // aggregate over the build keys and a might_contain predicate on

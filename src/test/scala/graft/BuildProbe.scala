@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: measured STAGE-BUILD scale probe (VERDICT r11 #1 — the
   * q174 graph-build grade). [[ScaleProbe]] times warm SERVING runs,
   * which deliberately exclude stage builds; this probe does the
@@ -17,12 +15,7 @@ object BuildProbe {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_BASE", "/root/testdata/sf0.1")
     val scaled = sys.env.getOrElse("SPARK_GRAFT_SCALED", "/tmp/sf1x")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("ERROR")
 
     val faces =

@@ -2,12 +2,10 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.functions.MinHashAgg
-import graft.operators.SkewJoin
 import graft.streaming.EventWindows
 
-/** Streaming event windows (watermark + session_window), salted skew
-  * join, typed MinHash aggregator, SparkSessionExtensions wiring. */
+/** Streaming event windows (watermark + session_window), the q144
+  * skew audit, SparkSessionExtensions wiring, fused vector kernels. */
 class ExtensionOpsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -104,43 +102,6 @@ class ExtensionOpsSpec extends SparkSuite {
     assert(hot.getAs[Long]("p50") <= hot.getAs[Long]("p99")
       && hot.getAs[Long]("p99") <= hot.getAs[Long]("max_c"))
     assert(hot.getAs[Long]("cnt") == hot.getAs[Long]("max_c"))
-  }
-
-  test("salted skew join equals plain join and splits the hot key") {
-    val left = ((1 to 900).map(i => ("hot", i)) ++ (1 to 100).map(i => (s"k$i", i)))
-      .toDF("key", "v")
-    val right = Seq(("hot", "H"), ("k1", "A"), ("k2", "B")).toDF("key", "name")
-    val plain = left.join(right, "key").select("key", "v", "name")
-    val salted = SkewJoin.saltedJoin(left, right, "key", factor = 8)
-      .select("key", "v", "name")
-    assert(plain.collect().toSet == salted.collect().toSet)
-    assert(salted.count() == 902)
-  }
-
-  test("typed MinHash aggregator matches the expression-form signature") {
-    import graft.functions.TextFns
-    val texts = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog again and again"),
-      (1L, "a wholly different document with its own set of words here"))
-    // expression form: whole-text shingle array → minhash columns
-    val exprSig = texts.toDF("doc_id", "text")
-      .withColumn("toks", TextFns.tokens(col("text")))
-      .withColumn("shingles", TextFns.shingleExpr("toks", 3))
-      .select(col("doc_id"), TextFns.minhash("shingles", 0).as("mh0"),
-        TextFns.minhash("shingles", 1).as("mh1"))
-      .as[(Long, String, String)].collect().sortBy(_._1).toSeq
-    // aggregator form: exploded (doc_id, shingle) relation
-    val agg = new MinHashAgg(2)
-    val aggSig = texts.toDF("doc_id", "text")
-      .withColumn("toks", TextFns.tokens(col("text")))
-      .withColumn("shingle", explode(TextFns.shingleExpr("toks", 3)))
-      .select(col("doc_id"), col("shingle")).as[(Long, String)]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(agg.toColumn.name("sig"))
-      .collect().sortBy(_._1).toSeq
-      .map { case (id, sig) => (id, sig(0), sig(1)) }
-    assert(exprSig == aggSig)
   }
 
   test("bronze zone ingests from JSON with an explicit nested schema (no inference)") {

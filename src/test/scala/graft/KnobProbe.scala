@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: the serving-knob-vs-corpus-scale probe (VERDICT r13 #2).
   * [[BuildProbe]] gates the BUILD quality at scale (head hits at the
   * default knob); this probe measures which SERVING knob setting
@@ -39,12 +37,7 @@ object KnobProbe {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_BASE", "/root/testdata/sf0.1")
     val scaled = sys.env.getOrElse("SPARK_GRAFT_SCALED", "/tmp/sf1x")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("ERROR")
 
     val beams = Seq(16, 32, 64, 128)

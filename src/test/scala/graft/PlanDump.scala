@@ -6,8 +6,9 @@ import java.nio.file.{Files, Paths}
   * round commits under plans/r<N>/. Usage:
   *   tools/run.sh graft.PlanDump <outDir> <suffix> <query...>
   * writes <outDir>/<query>_<suffix>.txt per query. Bench-shaped
-  * session (32 slots, 32 shuffle partitions, the pinned AQE floor) so
-  * the dumped shapes match the benched ones. */
+  * session (SPARK_GRAFT_CPUS slots and shuffle partitions, default
+  * nproc; the pinned AQE floor) so the dumped shapes match the
+  * benched ones. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
@@ -18,7 +19,7 @@ object PlanDump {
     // required explicitly instead of defaulting to a machine path.
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("PlanDump: set SPARK_GRAFT_SF_DIR to the data dir to dump against"))
-    val spark = BenchSession.create("32")
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

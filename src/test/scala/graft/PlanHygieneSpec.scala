@@ -1,15 +1,15 @@
 package graft
 
-/** Enforced version of the PlanAudit sweep: every registered query's
-  * physical plan must be free of the hard anti-patterns — Expand
+/** Plan-hygiene sweep: every registered query's physical plan must
+  * be free of the hard anti-patterns — Expand
   * (mixed-distinct aggregates), CartesianProduct (unbroadcast cross),
   * ScalaUDF / BatchEvalPython (codegen black boxes), and the
   * whole-group-buffering exact percentile aggregates — except the
   * known by-design carve-outs. Planning only (no collect): the
   * initial physical plan is inspected, which is where these nodes
   * appear or don't; AQE re-planning never INTRODUCES one of them.
-  * Shuffled joins are deliberately not enforced here (legitimate for
-  * fact-to-fact work) — PlanAudit prints them for human review.
+  * Shuffled joins are enforced only through the allowlist below
+  * (legitimate for fact-to-fact work, each carve-out reasoned).
   */
 class PlanHygieneSpec extends SparkSuite {
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: the measured scale probe (VERDICT r10 #1). For each face
   * query, times the WARM run (2nd of 2; stage builds and JIT excluded)
   * and counts output rows at the base dir and at the `make_scale.py`
@@ -14,12 +12,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_BASE", "/root/testdata/sf0.1")
     val scaled = sys.env.getOrElse("SPARK_GRAFT_SCALED", "/tmp/sf1x")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("ERROR")
 
     val faces =

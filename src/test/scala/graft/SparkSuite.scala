@@ -4,15 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session per suite (guide: one lazy SparkSession, not one per
-  * test). UTC + small shuffle partitions to mirror the harness. */
+  * test): the bench session at 4 slots / 4 shuffle partitions. */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = BenchSession.create("4")
     s.sparkContext.setLogLevel("WARN")
     s
   }

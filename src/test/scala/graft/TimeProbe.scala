@@ -4,7 +4,7 @@ object TimeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // bench-shaped session from the shared builder (ADVICE r16)
-    val spark = BenchSession.create("32")
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { name =>
       (1 to 2).foreach { i =>
