@@ -220,9 +220,9 @@ object Bench {
       // pre-existing base index — excluded from the rate, as with the
       // tombstone path)
       val (baseM, deltaM) = graft.queries.Clustering.navPopulations(spark, sfDir)
-      val (bHub, bSH) = graft.queries.Clustering.navFrozenLayers(baseM)
+      val (bHub, bSH) = graft.queries.Clustering.navFrozenLayers(spark, sfDir)
       graft.streaming.GraphIngest.seed(spark, s"$tmp/graph",
-        graft.queries.Clustering.navBaseGraph(spark, sfDir, baseM))
+        graft.queries.Clustering.navBaseGraph(spark, sfDir))
       val deltaEv = deltaM.select(col("vec_id"), col("fcid"), col("embedding"))
         .withColumn("timestamp", to_timestamp(lit(1700000000L)))
       val nDelta = deltaEv.count()

@@ -98,12 +98,27 @@ object Staged {
   private val frames: ThreadLocal[java.util.ArrayDeque[Frame]] =
     ThreadLocal.withInitial(() => new java.util.ArrayDeque[Frame]())
 
-  private def timed[T](key: String)(f: => T): T = {
+  /** SparkContext local property naming the stage whose build
+    * submitted a job: set for the duration of a build, restored to the
+    * enclosing build's key (or cleared) when it ends, so a listener
+    * reads `graft.stage` from `SparkListenerJobStart.properties` and
+    * charges each job to the innermost build. Local properties are
+    * inherited by the threads Spark SQL submits from (broadcast and
+    * subquery futures capture them). */
+  val StageProperty = "graft.stage"
+
+  private def timed[T](s: SparkSession, key: String)(f: => T): T = {
     val st = frames.get()
     val me = new Frame
     st.push(me)
+    val sc = s.sparkContext
+    val outer = sc.getLocalProperty(StageProperty)
+    sc.setLocalProperty(StageProperty, key)
     val t0 = System.nanoTime()
-    val r = try f finally { st.pop(): Unit }
+    val r = try f finally {
+      sc.setLocalProperty(StageProperty, outer)
+      st.pop(): Unit
+    }
     val total = (System.nanoTime() - t0) / 1e9
     buildSecs.put(key, math.max(0.0, total - me.innerSec))
     if (!st.isEmpty) st.peek().innerSec += total
@@ -111,7 +126,7 @@ object Staged {
   }
 
   def parquet(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val holder = memo.computeIfAbsent(key, k => new Holder(() => timed(k) {
+    val holder = memo.computeIfAbsent(key, k => new Holder(() => timed(s, k) {
       val p = stagePath(k)
       build.write.mode("overwrite").parquet(p)
       schemaMemo.put(k, s.read.parquet(p).schema)
@@ -147,7 +162,7 @@ object Staged {
     // namespace also makes the partition column part of the identity,
     // so the same table staged under two layouts stays two stages.
     val nsKey = s"partitioned[$partCol]|$key"
-    val holder = memo.computeIfAbsent(nsKey, k => new Holder(() => timed(k) {
+    val holder = memo.computeIfAbsent(nsKey, k => new Holder(() => timed(s, k) {
       val p = stagePath(k)
       val df = build
       schemaMemo.put(k, df.schema)

@@ -159,8 +159,12 @@ object Clustering {
       .withColumn("__vb",
         floor(col("vec_id") / PrefixSum.sqrtWidth(col("__mx"))).cast("long"))
       .drop("__mx")
+    // The rank's projection is not persisted: this build is staged
+    // ([[hierFinal]]), and a persist would outlive the stage's write as
+    // cached blocks nothing reads again.
     val ranked = PrefixSum.keyedRank(bucketed, key = Seq("cell"), bucket = "__vb",
-      ord = Seq(col("vec_id")), rankName = "__rnk", totalName = "__cnt")
+      ord = Seq(col("vec_id")), rankName = "__rnk", totalName = "__cnt",
+      persistProjection = false)
     // kc = ceil(cell_n / target): pure IEEE double division + ceil,
     // identical in DuckDB (150.0 cast to DOUBLE there — DuckDB's bare
     // 150.0 literal is DECIMAL, a different arithmetic).
@@ -380,21 +384,23 @@ object Clustering {
   // q97 contract — the only broadcast), and node long edges are
   // own-cluster hub (no scoring) + top-2 super-hubs (O(n·K)).
 
-  /** One hub per fine cluster: the min-vec_id member, with payloads.
-    * Grows as n/TargetClusterSize rows — distributed data, never
-    * broadcast, never self-joined whole. */
-  private def hubTable(members: DataFrame): DataFrame =
-    members.groupBy(col("fcid")).agg(min(col("vec_id")).as("vec_id"))
-      .join(members, Seq("vec_id", "fcid"))
-      .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-
-  /** Hubs with a 0-based rank by vec_id (`rid`) and the total count
-    * (`hn`), via the distributed two-level scan — no whole-table
-    * window. rid seeds the deterministic NN-Descent init and the
-    * super-hub modulus sample. */
+  /** One hub per fine cluster — the min-vec_id member, with payloads —
+    * ranked: (vec_id, fcid, embedding, nsq, rid, hn), where `rid` is
+    * the 0-based rank by vec_id and `hn` the hub count, via the
+    * distributed two-level scan (no whole-table window). Grows as
+    * n/TargetClusterSize rows — distributed data, never broadcast,
+    * never self-joined whole. rid seeds the deterministic NN-Descent
+    * init and the super-hub modulus sample. Callers stage it once per
+    * population ([[navLayers]], [[navFrozenLayers]]): it is a group-by,
+    * a join and PrefixSum's rank exchanges, so every unstaged
+    * reference re-runs all of them. The rank's projection is not
+    * persisted: the stage's single write is its only consumer, and a
+    * persist would leave cached blocks behind the stage. */
   private def hubRankTable(members: DataFrame): DataFrame = {
     import graft.operators.PrefixSum
-    val hubs = hubTable(members)
+    val hubs = members.groupBy(col("fcid")).agg(min(col("vec_id")).as("vec_id"))
+      .join(members, Seq("vec_id", "fcid"))
+      .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
     val mxh = hubs.agg(max(col("vec_id")).as("__mx"))
     PrefixSum.keyedRank(
         hubs.crossJoin(broadcast(mxh))
@@ -403,9 +409,9 @@ object Clustering {
             floor(col("vec_id") / PrefixSum.sqrtWidth(col("__mx"))).cast("long"))
           .drop("__mx"),
         key = Seq("__all"), bucket = "__vb", ord = Seq(col("vec_id")),
-        rankName = "__rnk", totalName = "__hn")
+        rankName = "__rnk", totalName = "__hn", persistProjection = false)
       .withColumn("rid", col("__rnk") - 1)
-      .select(col("vec_id"), col("embedding"), col("nsq"),
+      .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"),
         col("rid"), col("__hn").as("hn"))
   }
 
@@ -429,7 +435,7 @@ object Clustering {
     * member subset — [[knnBuild]]'s algorithm parameterized so q175
     * can build it over the BASE population only (filtering the staged
     * full-corpus graph would keep delta-displaced neighbors). */
-  private def knnTopEdges(members: DataFrame): DataFrame = {
+  private[graft] def knnTopEdges(members: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val a = members.select(col("fcid"), col("vec_id").as("va"),
       col("embedding").as("ea"), col("nsq").as("na"))
@@ -447,7 +453,13 @@ object Clustering {
 
   /** The navigable-graph edge set over `members` (vec_id, fcid,
     * embedding, nsq) given their cluster-mate kNN out-edges `knnE`
-    * (va, vb). Layers: symmetrized kNN; hub→top-R hubs by fixed-round
+    * (va, vb) and their ranked hub layer `hubRanked` — the STAGED
+    * [[hubRankTable]] of `members` ([[navLayers]] for the full corpus,
+    * [[navFrozenLayers]] for q175's base). Every hub-reading branch
+    * (the descent rounds' payloads, the ring and LSH seeds, the
+    * super-hub sample and the own-hub edges) reads that one table, so
+    * the hub group-by and its rank run once per population, not once
+    * per branch. Layers: symmetrized kNN; hub→top-R hubs by fixed-round
     * NN-DESCENT (Dong et al. 2011) seeded from stride-ring links
     * (bootstrap: every hub enters with links) UNIONED with LSH-bucket
     * top-R links (round 13: SEMANTIC seeds whose quality is
@@ -462,7 +474,8 @@ object Clustering {
     * node→own-cluster hub (fcid equi-join, no scoring) and node→top-2
     * super-hubs (O(n·K), constant broadcast) — the DiskANN long-edge
     * rule with a bounded build. */
-  private def navGraphBuild(members: DataFrame, knnE: DataFrame): DataFrame = {
+  private[graft] def navGraphBuild(members: DataFrame, knnE: DataFrame,
+      hubRanked: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val r = 3
     // Hub-link degree (round 13): 3 → 6. The hub layer GROWS with the
@@ -473,7 +486,6 @@ object Clustering {
     // doubles per-hop fanout at constant per-node cost. Still the
     // constant-degree contract — 6 never grows with n.
     val rh = 6
-    val hubRanked = hubRankTable(members)
     val he = hubRanked.select(col("vec_id"), col("embedding"), col("nsq"))
     // Stride-ring seeds by rank: guarantees every hub enters the
     // descent with links (no isolated bootstrap), but ring order is
@@ -521,16 +533,13 @@ object Clustering {
       .withColumn("brk", row_number().over(bw))
       .filter(col("brk") <= rh)
       .select(col("va"), col("vb"))
-    // r16 optimization: the tree is CUT here, not only between descent
-    // rounds. ndRound references its links 6× (direct arm, reversal,
-    // u2 probe, join arms), so an un-checkpointed init replicated the
-    // whole seed derivation — ring joins + LSH bucketing over the
-    // hubRank chain — per reference: ndRound-1's recorded plan
-    // description was 2.2 MB with ~430 distinct broadcast/shuffle
-    // query stages and 400 s of aggregate task CPU at sf0.1 (event-log
-    // measured). With init checkpointed the round plans collapse to
-    // references; measured stage builds drop q174graph 19.6 → 8.4 s,
-    // q175base 20.1 → 6.7 s at sf0.1.
+    // The tree is CUT here, not only between descent rounds: ndRound
+    // references its links 6× (direct arm, reversal, u2 probe, join
+    // arms), and without the cut each reference re-plans and re-runs
+    // the seed derivation — the ring self-join and the LSH bucket
+    // all-pairs window over the hub layer — as its own query stages.
+    // The hub layer itself is a staged read, so the cut only holds
+    // the two seed joins.
     val init = graft.operators.Lineage.cut(
       ringInit.unionByName(lshInit).distinct())
     def ndRound(links: DataFrame): DataFrame = {
@@ -571,7 +580,7 @@ object Clustering {
       .filter(col("hrk") <= r)
       .select(col("va"), col("vb"))
     val ownHub = members.select(col("vec_id").as("va"), col("fcid"))
-      .join(hubTable(members).select(col("fcid"), col("vec_id").as("vb")),
+      .join(hubRanked.select(col("fcid"), col("vec_id").as("vb")),
         Seq("fcid"))
       .filter(col("va") =!= col("vb"))
       .select(col("va"), col("vb"))
@@ -811,20 +820,37 @@ object Clustering {
     * hardcoded its own copy and could silently drift). */
   private[graft] val NavProbes = 8
 
-  /** The full-corpus ROUTING layers of a dir's navigable graph — (hub
-    * table, K=8 super-hub sample) over its hierarchy members — staged
-    * once per dir next to `q174graph`. Both are probe-independent
-    * index artifacts, so every serving face that routes over the full
-    * layers (q174/q177/q179/q181/q182, q180's re-insert attach) reads
-    * them instead of re-deriving the hub group-by and the ranked
-    * super-hub sample per serve. */
-  private def navLayers(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    def nodes = hierMembers(s, dir)
+  /** A dir's hierarchy members as the graph build and the serving
+    * faces read them: (vec_id, fcid, embedding, nsq). */
+  private def navNodes(s: SparkSession, dir: String): DataFrame =
+    hierMembers(s, dir)
       .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-    (graft.operators.Staged.parquet(s, s"q174hubs|$dir")(hubTable(nodes)),
-      graft.operators.Staged.parquet(s, s"q174supers|$dir")(
-        superHubTable(hubRankTable(nodes))))
+
+  /** The full-corpus ROUTING layers of a dir's navigable graph — (ranked
+    * hub table, K=8 super-hub sample) over its hierarchy members —
+    * staged once per dir. The ranked hubs (`q174hubs`, see
+    * [[hubRankTable]]) are the one hub derivation of the full index:
+    * [[navGraph]]'s build reads them, and the super-hub sample
+    * (`q174supers`) is a filter over that stage. Both are
+    * probe-independent index artifacts, so every serving face that
+    * routes over the full layers (q174/q177/q179/q181/q182, q180's
+    * re-insert attach) reads them instead of re-deriving the hub
+    * group-by and the ranked super-hub sample per serve. */
+  private def navLayers(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val hubs = graft.operators.Staged.parquet(s, s"q174hubs|$dir")(
+      hubRankTable(navNodes(s, dir)))
+    (hubs, graft.operators.Staged.parquet(s, s"q174supers|$dir")(superHubTable(hubs)))
   }
+
+  /** The full-corpus navigable graph of a dir (`q174graph`), staged
+    * once: [[navGraphBuild]] over the hierarchy members, their kNN
+    * out-edges and the staged hub layer of [[navLayers]]. The one
+    * accessor every q174-family face reads the index through. */
+  private[graft] def navGraph(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Staged.parquet(s, s"q174graph|$dir") {
+      navGraphBuild(navNodes(s, dir),
+        knnRanked(s, dir).select(col("va"), col("vb")), navLayers(s, dir)._1)
+    }
 
   /** Shared serving wiring of the q174-family full-index faces (q174,
     * q181, q182 and the beam-sweep probe hook): the staged navigable
@@ -836,11 +862,8 @@ object Clustering {
     * g, probes, entries). */
   private[graft] def navServing(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val nodes = hierMembers(s, dir)
-      .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-    val g = graft.operators.Staged.parquet(s, s"q174graph|$dir") {
-      navGraphBuild(nodes, knnRanked(s, dir).select(col("va"), col("vb")))
-    }
+    val nodes = navNodes(s, dir)
+    val g = navGraph(s, dir)
     val nodesP = nodes.select(col("vec_id"), col("embedding"), col("nsq"))
     val probesF = onDriver(nodes.filter(col("vec_id") < NavProbes)
       .select(col("vec_id").as("probe_id"), col("fcid").as("p_fcid"),
@@ -1003,24 +1026,30 @@ object Clustering {
     * its spec wire the SAME populations the q175/q176 oracles prove. */
   private[graft] def navPopulations(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val nodes = hierMembers(s, dir)
-      .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
+    val nodes = navNodes(s, dir)
     (nodes.filter(col("vec_id") % 10 =!= 0),
       nodes.filter(col("vec_id") % 10 === 0))
   }
 
   /** The frozen routing layers a delta batch attaches against:
-    * (base hub table, base super-hub sample). */
-  private[graft] def navFrozenLayers(baseM: DataFrame)
-      : (DataFrame, DataFrame) =
-    (hubTable(baseM), superHubTable(hubRankTable(baseM)))
+    * (base ranked hub table, base super-hub sample). The ranked base
+    * hubs are staged once per dir (`q175hubs`) — the same stage the
+    * base graph build reads — and the super-hub sample is a filter
+    * over it. */
+  private[graft] def navFrozenLayers(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val hubs = graft.operators.Staged.parquet(s, s"q175hubs|$dir")(
+      hubRankTable(navPopulations(s, dir)._1))
+    (hubs, superHubTable(hubs))
+  }
 
   /** The STAGED base navigable graph (the pre-existing index artifact
-    * a delta merge reads, not recomputes). */
-  private[graft] def navBaseGraph(s: SparkSession, dir: String,
-      baseM: DataFrame): DataFrame =
+    * a delta merge reads, not recomputes), built over the staged base
+    * hubs of [[navFrozenLayers]]. */
+  private[graft] def navBaseGraph(s: SparkSession, dir: String): DataFrame =
     graft.operators.Staged.parquet(s, s"q175base|$dir") {
-      navGraphBuild(baseM, knnTopEdges(baseM))
+      val baseM = navPopulations(s, dir)._1
+      navGraphBuild(baseM, knnTopEdges(baseM), navFrozenLayers(s, dir)._1)
     }
 
   /** Attach edges for `delta` (vec_id, fcid, embedding, nsq) against
@@ -1071,8 +1100,8 @@ object Clustering {
   private def maintained(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val (baseM, delta) = navPopulations(s, dir)
-    val baseG = navBaseGraph(s, dir, baseM)
-    val (bHub, bSH) = navFrozenLayers(baseM)
+    val baseG = navBaseGraph(s, dir)
+    val (bHub, bSH) = navFrozenLayers(s, dir)
     (baseM, delta, baseG, bHub, bSH, attachEdges(delta, baseM, bHub, bSH))
   }
 
@@ -1767,8 +1796,7 @@ object Clustering {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val (p, b, hops, k) = (80, 16, 5, 20)
-        val nodes = hierMembers(s, dir)
-          .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
+        val nodes = navNodes(s, dir)
         val (baseM, delta, baseG, bHub, bSH, attach) = maintained(s, dir)
         val g = graft.operators.Staged.parquet(s, s"q176m|$dir") {
           baseG.unionByName(attach)
@@ -1849,11 +1877,8 @@ object Clustering {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val (p, b, hops, k) = (8, 16, 5, 20)
-        val nodes = hierMembers(s, dir)
-          .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-        val g = graft.operators.Staged.parquet(s, s"q174graph|$dir") {
-          navGraphBuild(nodes, knnRanked(s, dir).select(col("va"), col("vb")))
-        }
+        val nodes = navNodes(s, dir)
+        val g = navGraph(s, dir)
         val nodesP = nodes.select(col("vec_id"), col("embedding"), col("nsq"))
         // probes are LIVE ids only (r12 advice): a deleted vector
         // stops issuing queries the moment it is tombstoned, so
@@ -1936,11 +1961,8 @@ object Clustering {
     QueryDef(
       "q178_ann_graph_compaction",
       (s, dir) => {
-        val nodes = hierMembers(s, dir)
-          .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-        val g = graft.operators.Staged.parquet(s, s"q174graph|$dir") {
-          navGraphBuild(nodes, knnRanked(s, dir).select(col("va"), col("vb")))
-        }
+        val nodes = navNodes(s, dir)
+        val g = navGraph(s, dir)
         compactedGraph(s, dir, nodes, g)
           .orderBy(col("va"), col("vb"))
       },
@@ -1975,11 +1997,8 @@ object Clustering {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val (p, b, hops, k) = (8, 16, 5, 20)
-        val nodes = hierMembers(s, dir)
-          .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-        val g0 = graft.operators.Staged.parquet(s, s"q174graph|$dir") {
-          navGraphBuild(nodes, knnRanked(s, dir).select(col("va"), col("vb")))
-        }
+        val nodes = navNodes(s, dir)
+        val g0 = navGraph(s, dir)
         val g = compactedGraph(s, dir, nodes, g0).select(col("va"), col("vb"))
         // the scoring corpus is the LIVE population — every compacted
         // edge endpoint is live, so nothing narrower can be reached
@@ -2062,11 +2081,8 @@ object Clustering {
     QueryDef(
       "q180_ann_graph_reinsert",
       (s, dir) => {
-        val nodes = hierMembers(s, dir)
-          .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
-        val g0 = graft.operators.Staged.parquet(s, s"q174graph|$dir") {
-          navGraphBuild(nodes, knnRanked(s, dir).select(col("va"), col("vb")))
-        }
+        val nodes = navNodes(s, dir)
+        val g0 = navGraph(s, dir)
         recompletedGraph(s, dir, nodes, g0)
           .orderBy(col("va"), col("vb"))
       },
@@ -2104,8 +2120,7 @@ object Clustering {
         // q174's own ([[navServing]] — re-inserted hubs are reachable
         // nodes once more); only the walked graph differs
         val (nodesP, g0, probes, entries) = navServing(s, dir)
-        val nodes = hierMembers(s, dir)
-          .select(col("vec_id"), col("fcid"), col("embedding"), col("nsq"))
+        val nodes = navNodes(s, dir)
         val g = recompletedGraph(s, dir, nodes, g0)
           .select(col("va"), col("vb"))
         val w = Window.partitionBy(col("probe_id"))

@@ -5,7 +5,10 @@ package graft
   * which deliberately exclude stage builds; this probe does the
   * opposite: it drives each face once at the base dir and once at the
   * `make_scale.py` replica, then prints every [[graft.operators.Staged]]
-  * build timing (keys embed the dir, so one JVM holds both sides).
+  * build timing (keys embed the dir, so one JVM holds both sides) and
+  * the Spark jobs each build ran itself (nested builds count toward
+  * their own key), read from the `Staged.StageProperty` local property
+  * on every job start.
   * The 10x/1x ratio of a staged key is the BUILD scale story for that
   * artifact — for `q174graph|…` it must be ~linear now that the hub
   * layer is NN-Descent + constant-K super-hubs instead of a hub-pair
@@ -17,6 +20,13 @@ object BuildProbe {
     val scaled = sys.env.getOrElse("SPARK_GRAFT_SCALED", "/tmp/sf1x")
     val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("ERROR")
+    val stageJobs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty(graft.operators.Staged.StageProperty)))
+          .foreach(k => stageJobs.merge(k, 1L, (a, b) => a + b): Unit)
+    })
 
     val faces =
       if (args.nonEmpty) args.toSeq
@@ -33,9 +43,11 @@ object BuildProbe {
           .write.format("noop").mode("overwrite").save()
       }
     }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
     graft.operators.Staged.buildTimings.toSeq.sortBy(_._1).foreach {
       case (k, v) =>
-        println(f"""STAGE {"key":"$k","sec":$v%.3f}""")
+        val jobs = Option(stageJobs.get(k)).fold(0L)(_.longValue)
+        println(f"""STAGE {"key":"$k","sec":$v%.3f,"jobs":$jobs}""")
     }
 
     // NN-Descent hub-layer quality gate (VERDICT r12 #4): the fixed

@@ -82,6 +82,17 @@ class ClusteringSpec extends SparkSuite {
     hierCheck("/root/testdata/sf0.1")
   }
 
+  test("a hierarchical build written once leaves no cached blocks") {
+    // The build is staged (parquet, off-heap); a persist inside it
+    // would stay registered with the CacheManager after the stage is
+    // written, and nothing reads it again.
+    spark.catalog.clearCache()
+    graft.queries.Clustering.hierBuild(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the hierarchical build left cached data behind")
+  }
+
   test("hierarchical clustering: plan-literal/driver centroid state is corpus-independent; cluster count is not") {
     // The plan may carry ONLY the constant coarse centroids as
     // literals (MinK sqdist_f calls against literal arrays); the fine
@@ -630,14 +641,7 @@ class ClusteringSpec extends SparkSuite {
     // before compaction still has out-edges after (its dead
     // out-neighbors had live out-neighbors to reconnect through —
     // true at the test SFs because routing nodes link both ways).
-    // Constructing q174 first guarantees the staged graph exists, so
-    // the read below never evaluates its build closure.
-    SparkEntry.queries("q174_ann_graph_search")(spark, "/root/testdata/sf0.001")
-      .count(): Unit
-    val orig = graft.operators.Staged
-      .parquet(spark, s"q174graph|/root/testdata/sf0.001") {
-        throw new IllegalStateException("stage must already exist")
-      }
+    val orig = graft.queries.Clustering.navGraph(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val liveWithOut = orig.filter { case (va, _) => va % 7 != 3 }.map(_._1).toSet
     val postOut = out.map(_._1).toSet

@@ -26,8 +26,8 @@ class GraphIngestSpec extends SparkSuite {
   test("batched attach: two batches equal one-shot q175 truth, replay idempotent") {
     val dir = Files.createTempDirectory("graft_gingest").toString
     val (baseM, delta) = Clustering.navPopulations(spark, sfDir)
-    val (bHub, bSH) = Clustering.navFrozenLayers(baseM)
-    GraphIngest.seed(spark, dir, Clustering.navBaseGraph(spark, sfDir, baseM))
+    val (bHub, bSH) = Clustering.navFrozenLayers(spark, sfDir)
+    GraphIngest.seed(spark, dir, Clustering.navBaseGraph(spark, sfDir))
 
     // split the delta arbitrarily in two — attach edges are per-vector
     // independent, so the split must not matter
@@ -64,8 +64,8 @@ class GraphIngestSpec extends SparkSuite {
     val evDir = root.resolve("events").toString
     val ckpt = root.resolve("ckpt").toString
     val (baseM, delta) = Clustering.navPopulations(spark, sfDir)
-    val (bHub, bSH) = Clustering.navFrozenLayers(baseM)
-    GraphIngest.seed(spark, graphDir, Clustering.navBaseGraph(spark, sfDir, baseM))
+    val (bHub, bSH) = Clustering.navFrozenLayers(spark, sfDir)
+    GraphIngest.seed(spark, graphDir, Clustering.navBaseGraph(spark, sfDir))
 
     val t0 = lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))
     val t1 = lit(java.sql.Timestamp.valueOf("2026-01-01 01:00:00"))

@@ -150,6 +150,40 @@ class PlanHygieneSpec extends SparkSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("navigable-graph build stays within its job budget (hub layer read once)") {
+    // A fresh build over materialized inputs — the base population,
+    // its kNN out-edges and the staged ranked base hubs — written to
+    // noop, every job start counted (sf0.001, 4 slots). When each
+    // hub-reading branch re-derived the hub group-by and its PrefixSum
+    // rank itself, this build ran 139 jobs; over the one staged hub
+    // table it runs 25. The budget catches a branch that derives the
+    // hub layer again.
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.queries.Clustering
+    val tmp = java.nio.file.Files.createTempDirectory("graft_navjobs").toString
+    val baseM = Clustering.navPopulations(spark, sfDir)._1
+    baseM.write.parquet(s"$tmp/members")
+    Clustering.knnTopEdges(baseM).write.parquet(s"$tmp/knn")
+    val members = spark.read.parquet(s"$tmp/members")
+    val knnE = spark.read.parquet(s"$tmp/knn")
+    val hubs = Clustering.navFrozenLayers(spark, sfDir)._1
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Clustering.navGraphBuild(members, knnE, hubs)
+        .write.format("noop").mode("overwrite").save()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 30,
+      s"navigable-graph build ran ${jobs.get} jobs (budget 30)")
+  }
+
   test("q197 pair scoring stays dense (r17 batch-3 win guard)") {
     // The MaxSim pair stage must be the broadcast nested-loop over the
     // DENSE chunk rows (16-term multiply-add per pair) — never the

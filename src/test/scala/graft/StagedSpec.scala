@@ -72,4 +72,36 @@ class StagedSpec extends SparkSuite {
     assert(ok.count() == 1)
     assert(attempts == 2)
   }
+
+  test("a build's jobs carry its stage key; a nested build pushes and pops it") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        labels.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty(Staged.StageProperty)))
+          .getOrElse("-")): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Staged.parquet(spark, "stagedspec_label_outer") {
+        spark.range(10).count(): Unit
+        Staged.parquet(spark, "stagedspec_label_inner")(Seq(2).toDF("v")).count(): Unit
+        Seq(3).toDF("v")
+      }.count(): Unit
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seq = labels.asScala.toSeq
+    // consecutive jobs of one build collapse to one entry
+    val runs = seq.zipWithIndex.collect {
+      case (l, i) if i == 0 || seq(i - 1) != l => l
+    }
+    assert(runs == Seq("stagedspec_label_outer", "stagedspec_label_inner",
+      "stagedspec_label_outer", "-"), s"job labels in order: $seq")
+    assert(sc.getLocalProperty(Staged.StageProperty) == null,
+      "the stage property outlived its build")
+  }
 }
