@@ -737,9 +737,6 @@ object Clustering {
     val candSchema = StructType(
       Seq(StructField("probe_id", LongType), StructField("vec_id", LongType)) ++
         probe.schema.fields.tail ++ node.schema.fields.tail)
-    val sim = Num.fround(
-      VectorFns.cosine(VectorFns.dotF("p_emb", "embedding"),
-        col("p_nsq"), col("nsq")), 4)
     // (probe_id, vec_id) pairs scored as (probe_id, vec_id, sim); a
     // pair whose vector is not in `nodesP` drops out, as in a join
     def score(cand: Seq[(Long, Long)]): DataFrame = {
@@ -752,7 +749,7 @@ object Clustering {
           yield Row(p, v, pr.get(1), pr.get(2), nr.get(1), nr.get(2))
       }
       s.createDataFrame(rows.asJava, candSchema)
-        .select(col("probe_id"), col("vec_id"), sim.as("sim"))
+        .select(col("probe_id"), col("vec_id"), probeSim.as("sim"))
     }
     var beam = entries.select(col("probe_id"), col("vec_id"))
       .filter(col("vec_id") =!= col("probe_id"))
@@ -853,7 +850,7 @@ object Clustering {
     }
 
   /** Shared serving wiring of the q174-family full-index faces (q174,
-    * q181, q182 and the beam-sweep probe hook): the staged navigable
+    * q181 and q182's [[beamSweep]]): the staged navigable
     * graph over the dir's hierarchy members plus the scoring corpus,
     * the probe payloads (vec_id < [[NavProbes]], held on the driver)
     * and entry points routed over the staged [[navLayers]] — factored
@@ -873,39 +870,72 @@ object Clustering {
     (nodesP, g, probes, routedEntries(probesF, nodes, hubs, supers))
   }
 
-  /** Shared exact top-20 ground truth of the FULL-index serving faces
-    * (q174 and q182 rank against the same full corpus with the same
-    * probes) — r17 (VERDICT r16 #3, guide §6): previously each face
-    * re-ran the identical corpus × broadcast-probes pass per serve;
-    * now it is a Staged artifact per dir, ≤ NavProbes·20 rows
-    * (probe_id, vec_id, hit=1). The maintained/tombstoned/compacted/
-    * reinserted faces (q176/q177/q179/q181) rank over DIFFERENT live
-    * populations and keep their own inline harnesses. Both oracles
-    * still derive their exact CTEs independently. */
+  /** Exact top-20 ground truth of the FULL-index serving faces (q174,
+    * q181 and q182 rank against the same full corpus with the same
+    * probes), staged per dir: ≤ NavProbes·20 rows (probe_id, vec_id,
+    * hit=1) materialized next to the index instead of recomputed per
+    * serve. The delta and live faces stage their own populations
+    * ([[navExact20Delta]], [[navExact20Live]]). The oracles still
+    * derive their exact CTEs independently. */
   private def navExact20(s: SparkSession, dir: String): DataFrame =
     graft.operators.Staged.parquet(s, s"navx20|$dir") {
       val (nodesP, _, probes, _) = navServing(s, dir)
       exactTop20(nodesP, probes)
     }
 
-  /** The one exact-harness body behind every staged nav ground truth:
+  // ---- The ANN filter-and-refine harness ------------------------
+  // Every ANN face (IVF, BQ and graph) scores probes against vectors
+  // with the same 4dp cosine, cuts to a top-k by (sim DESC, vec_id),
+  // and flags what it served against an exact top-20. These are the
+  // one copy of each piece; the Vectors faces also share the IVF
+  // routing and the two-tier re-rank built on them.
+
+  /** 4dp cosine of a probe (`p_emb`, `p_nsq`) to a vector (`embedding`,
+    * `nsq`) — the rank key of every served and every exact row. */
+  private[queries] def probeSim: Column = Num.fround(
+    VectorFns.cosine(VectorFns.dotF("p_emb", "embedding"),
+      col("p_nsq"), col("nsq")), 4)
+
+  /** Rows ranked per probe by (sim DESC, vec_id) as a long `rank`, cut
+    * to rank ≤ k. */
+  private[queries] def topBySim(rows: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col("sim").desc, col("vec_id"))
+    rows.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
+  /** The one exact top-20 pass behind every staged ground truth:
     * corpus × broadcast probes, 4dp cosine, top-20 per probe,
     * (probe_id, vec_id, hit=1) out. The corpus/probe POPULATIONS are
     * what distinguish the serving faces; the math never differs. */
-  private def exactTop20(corpus: DataFrame, probes: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sim = Num.fround(
-      VectorFns.cosine(VectorFns.dotF("p_emb", "embedding"),
-        col("p_nsq"), col("nsq")), 4)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    corpus.crossJoin(broadcast(probes))
+  private[queries] def exactTop20(corpus: DataFrame, probes: DataFrame): DataFrame =
+    topBySim(corpus.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), sim.as("sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 20)
+      .select(col("probe_id"), col("vec_id"), probeSim.as("sim")), 20)
       .select(col("probe_id"), col("vec_id"), lit(1).as("hit"))
-  }
+
+  /** The hit flag: served (probe_id, vec_id) rows left-join their exact
+    * top-20 — ≤ probes·20 rows, so it broadcasts — keeping `cols` plus
+    * `hit` (1 inside the exact set, 0 outside). */
+  private[queries] def flagHits(served: DataFrame, exact: DataFrame,
+      cols: Column*): DataFrame =
+    served.join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
+      .select(cols :+ coalesce(col("hit"), lit(0)).as("hit"): _*)
+
+  /** [[flagHits]] summed for a knob sweep: one row (`results`, `hits`). */
+  private[queries] def hitTotals(served: DataFrame, exact: DataFrame,
+      results: String): DataFrame =
+    served.join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
+      .agg(count(lit(1)).as(results),
+        sum(coalesce(col("hit"), lit(0))).cast("long").as("hits"))
+
+  /** A graph face's answer: the walk's top-8 per probe, flagged. */
+  private def servedTop8(walk: DataFrame, exact: DataFrame): DataFrame =
+    flagHits(topBySim(walk, 8), exact,
+      col("probe_id"), col("rank"), col("vec_id"), col("sim"))
+      .orderBy(col("probe_id"), col("rank"))
 
   /** Shared exact top-20 over the LIVE population (vec_id % 7 ≠ 3)
     * with LIVE probes (vec_id < [[NavProbes]]) — q177 (lazy-masked
@@ -989,12 +1019,9 @@ object Clustering {
     * and entries are collected once and shared by every walk. */
   private[graft] def beamSweep(s: SparkSession, dir: String,
       beams: Seq[Int], hops: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (nodesP, g, probes, navEntries) = navServing(s, dir)
     val entries = onDriver(navEntries)
     val exact = navExact20(s, dir)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
     // The walks share only read-only inputs, and each hop job is a
     // small filtered scan that leaves most task slots idle, so the
     // walks overlap on a small DEDICATED pool (r17, VERDICT r16 #8: a
@@ -1008,12 +1035,8 @@ object Clustering {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val perBeam =
       try Await.result(Future.sequence(beams.map { b => Future {
-        beamWalkScored(nodesP, g, probes, entries, b, hops)
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 8)
-          .join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
-          .agg(count(lit(1)).as("n_results"),
-            sum(coalesce(col("hit"), lit(0))).cast("long").as("hits"))
+        hitTotals(topBySim(beamWalkScored(nodesP, g, probes, entries, b, hops), 8),
+          exact, "n_results")
           .select(lit(b.toLong).as("beam"), col("n_results"), col("hits"))
       } }), 30.minutes)
       finally pool.shutdown()
@@ -1657,7 +1680,6 @@ object Clustering {
     QueryDef(
       "q174_ann_graph_search",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val (b, hops) = (16, 5)
         // NAVIGABILITY: the cluster-mate kNN edges alone are a
         // DISCONNECTED graph (one component per fine cluster — a walk
@@ -1670,23 +1692,14 @@ object Clustering {
         // hub layer. Wiring is the shared [[navServing]] (probes =
         // vec_id < NavProbes).
         val (nodesP, g, probes, entries) = navServing(s, dir)
-        val w = Window.partitionBy(col("probe_id"))
-          .orderBy(col("sim").desc, col("vec_id"))
         // the candidate/beam side is P·B·deg-bounded at ANY corpus
         // size, so it is driver state, never a join side; the walk
         // itself is [[beamWalkScored]], shared with
-        // q176/q177/q179/q181/q182
-        val found = beamWalkScored(nodesP, g, probes, entries, b, hops)
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 8)
-        // exact harness: the staged [[navExact20]] (one corpus ×
-        // broadcast-probes pass per JVM, the q112 shape — shared with
-        // q182)
-        val exact = navExact20(s, dir)
-        found.join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
-          .select(col("probe_id"), col("rank"), col("vec_id"), col("sim"),
-            coalesce(col("hit"), lit(0)).as("hit"))
-          .orderBy(col("probe_id"), col("rank"))
+        // q176/q177/q179/q181/q182. Exact harness: the staged
+        // [[navExact20]] (one corpus × broadcast-probes pass per JVM,
+        // the q112 shape — shared with q181/q182).
+        servedTop8(beamWalkScored(nodesP, g, probes, entries, b, hops),
+          navExact20(s, dir))
       },
       Some {
         val (p, b, hops, k) = (8, 16, 5, 20)
@@ -1794,7 +1807,6 @@ object Clustering {
     QueryDef(
       "q176_ann_graph_serve_delta",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val (p, b, hops, k) = (80, 16, 5, 20)
         val nodes = navNodes(s, dir)
         val (baseM, delta, baseG, bHub, bSH, attach) = maintained(s, dir)
@@ -1811,18 +1823,8 @@ object Clustering {
             col("embedding").as("p_emb"), col("nsq").as("p_nsq")))
         val probes = probesF.select(col("probe_id"), col("p_emb"), col("p_nsq"))
         val entries = routedEntries(probesF, baseM, bHub, bSH)
-        val w = Window.partitionBy(col("probe_id"))
-          .orderBy(col("sim").desc, col("vec_id"))
-        val found = beamWalkScored(nodesP, g, probes, entries, b, hops)
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 8)
-        // r17: the staged [[navExact20Delta]] harness (same corpus,
-        // probes, cosine and rank cut as the inline pass it replaces)
-        val exact = navExact20Delta(s, dir)
-        found.join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
-          .select(col("probe_id"), col("rank"), col("vec_id"), col("sim"),
-            coalesce(col("hit"), lit(0)).as("hit"))
-          .orderBy(col("probe_id"), col("rank"))
+        servedTop8(beamWalkScored(nodesP, g, probes, entries, b, hops),
+          navExact20Delta(s, dir))
       },
       Some {
         val (p, b, hops, k) = (80, 16, 5, 20)
@@ -1875,7 +1877,6 @@ object Clustering {
     QueryDef(
       "q177_ann_graph_tombstone_serve",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val (p, b, hops, k) = (8, 16, 5, 20)
         val nodes = navNodes(s, dir)
         val g = navGraph(s, dir)
@@ -1891,23 +1892,12 @@ object Clustering {
         val probes = probesF.select(col("probe_id"), col("p_emb"), col("p_nsq"))
         val (hubs, supers) = navLayers(s, dir)
         val entries = routedEntries(probesF, nodes, hubs, supers)
-        val w = Window.partitionBy(col("probe_id"))
-          .orderBy(col("sim").desc, col("vec_id"))
         // the mask: applied AFTER the walk (tombstoned nodes routed
         // the beam), BEFORE result ranking — ranks stay dense over
-        // live results
-        val found = beamWalkScored(nodesP, g, probes, entries, b, hops)
-          .filter(col("vec_id") % 7 =!= 3)
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 8)
-        // r17: the staged [[navExact20Live]] harness — identical live
-        // corpus, live probes, cosine and rank cut; SHARED with q179
-        // (that comparability is the lifecycle family's design)
-        val exact = navExact20Live(s, dir)
-        found.join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
-          .select(col("probe_id"), col("rank"), col("vec_id"), col("sim"),
-            coalesce(col("hit"), lit(0)).as("hit"))
-          .orderBy(col("probe_id"), col("rank"))
+        // live results. The [[navExact20Live]] harness is SHARED with
+        // q179 (that comparability is the lifecycle family's design).
+        servedTop8(beamWalkScored(nodesP, g, probes, entries, b, hops)
+          .filter(col("vec_id") % 7 =!= 3), navExact20Live(s, dir))
       },
       Some {
         val (p, b, hops, k) = (8, 16, 5, 20)
@@ -1995,7 +1985,6 @@ object Clustering {
     QueryDef(
       "q179_ann_graph_compacted_serve",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val (p, b, hops, k) = (8, 16, 5, 20)
         val nodes = navNodes(s, dir)
         val g0 = navGraph(s, dir)
@@ -2014,18 +2003,8 @@ object Clustering {
         val entries = routedEntries(probesF, liveM,
           hubs.filter(col("vec_id") % 7 =!= 3),
           supers.filter(col("vec_id") % 7 =!= 3))
-        val w = Window.partitionBy(col("probe_id"))
-          .orderBy(col("sim").desc, col("vec_id"))
-        val found = beamWalkScored(live, g, probes, entries, b, hops)
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 8)
-        // r17: the staged [[navExact20Live]] harness, shared with q177
-        // (same live corpus, probes, cosine, rank cut)
-        val exact = navExact20Live(s, dir)
-        found.join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
-          .select(col("probe_id"), col("rank"), col("vec_id"), col("sim"),
-            coalesce(col("hit"), lit(0)).as("hit"))
-          .orderBy(col("probe_id"), col("rank"))
+        servedTop8(beamWalkScored(live, g, probes, entries, b, hops),
+          navExact20Live(s, dir))
       },
       Some {
         val (p, b, hops, k) = (8, 16, 5, 20)
@@ -2113,7 +2092,6 @@ object Clustering {
     QueryDef(
       "q181_ann_graph_reinserted_serve",
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val (b, hops) = (16, 5)
         // the whole corpus is live again after re-insertion, so probes
         // (vec_id < 8) and entries routed over the FULL layers are
@@ -2123,20 +2101,11 @@ object Clustering {
         val nodes = navNodes(s, dir)
         val g = recompletedGraph(s, dir, nodes, g0)
           .select(col("va"), col("vb"))
-        val w = Window.partitionBy(col("probe_id"))
-          .orderBy(col("sim").desc, col("vec_id"))
-        val found = beamWalkScored(nodesP, g, probes, entries, b, hops)
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 8)
-        // r17: q181's exact harness is EXACTLY q174's (full corpus,
-        // vec_id < 8 probes, top-20) — the whole point of the update
-        // cycle is restoring the original serving contract — so it
-        // reuses the staged [[navExact20]], zero extra artifacts.
-        val exact = navExact20(s, dir)
-        found.join(broadcast(exact), Seq("probe_id", "vec_id"), "left")
-          .select(col("probe_id"), col("rank"), col("vec_id"), col("sim"),
-            coalesce(col("hit"), lit(0)).as("hit"))
-          .orderBy(col("probe_id"), col("rank"))
+        // q181's exact harness is EXACTLY q174's (full corpus, vec_id
+        // < 8 probes, top-20) — the whole point of the update cycle is
+        // restoring the original serving contract.
+        servedTop8(beamWalkScored(nodesP, g, probes, entries, b, hops),
+          navExact20(s, dir))
       },
       Some {
         val (p, b, hops, k) = (8, 16, 5, 20)

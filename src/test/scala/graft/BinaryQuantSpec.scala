@@ -152,4 +152,20 @@ class BinaryQuantSpec extends SparkSuite {
     assert(hitsBy(256L) >= hitsBy(16L), s"widest lost recall vs narrowest: $hitsBy")
     assert(hitsBy(256L) >= 40, s"widest width degenerated: ${hitsBy(256L)}")
   }
+
+  test("KnobProbe's builders reproduce the q191, q187 and q201 faces") {
+    import org.apache.spark.sql.functions.{col, sum}
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rows(queries.Vectors.bqSweep(spark, sfDir, Seq(16, 64, 256))) ==
+      rows(SparkEntry.queries("q191_ann_bq_sweep")(spark, sfDir)
+        .select("c_width", "results", "hits")))
+    def hitSum(df: org.apache.spark.sql.DataFrame) =
+      df.agg(sum(col("hit")).cast("long")).head().getLong(0)
+    Seq(("q187_ann_ivf_bq", 2, 64), ("q201_ann_ivf_bq_tuned", 4, 256)).foreach {
+      case (name, nprobe, cWidth) =>
+        assert(hitSum(queries.Vectors.ivfBqServed(spark, sfDir, nprobe, cWidth)) ==
+          hitSum(SparkEntry.queries(name)(spark, sfDir)), name)
+    }
+  }
 }

@@ -127,11 +127,7 @@ class ExtensionOpsSpec extends SparkSuite {
     assert(silver.select("champion").as[String].collect().toSeq == Seq("Ahri"))
   }
 
-  test("GraftExtensions applies cleanly; expression evaluates standalone and via SQL") {
-    // builder-time injection path (a fresh real session would pass
-    // spark.sql.extensions=graft.GraftExtensions; here we exercise the
-    // apply + the expression's interpreted eval directly)
-    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
+  test("NormalizeNFKC evaluates standalone and via SQL after register") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     val e = graft.functions.NormalizeNFKC(Literal.create("  ÉCOLE ",
       org.apache.spark.sql.types.StringType))

@@ -1,12 +1,12 @@
 package graft
 
 /** Storage layout of the ANN serving indexes (q103 IVF×SQ, q154
-  * IVF+PQ): the staged index table is written hive-partitioned by
-  * `cell`, and the probe path pushes the probed cells onto the scan
-  * as a LITERAL partition filter — so the serving read selects the
-  * nprobe cells' directories at file-listing time instead of scanning
-  * the whole index (the BucketingSpec discipline applied to the ANN
-  * artifact). Correctness of the values is the DuckDB differential's
+  * IVF+PQ, q187/q201 IVF×BQ): the staged index table is written
+  * hive-partitioned by `cell`, and the probe path pushes the probed
+  * cells onto the scan as a LITERAL partition filter — so the serving
+  * read selects the nprobe cells' directories at file-listing time
+  * instead of scanning the whole index (the BucketingSpec discipline
+  * applied to the ANN artifact). Correctness of the values is the DuckDB differential's
   * job; this spec pins the PLAN property that makes the design hold
   * at 100 TB.
   */
@@ -43,6 +43,10 @@ class IvfLayoutSpec extends SparkSuite {
 
   test("q187 serving scan partition-prunes on cell with a literal IN-list") {
     assertLiteralCellPruning("q187_ann_ivf_bq")
+  }
+
+  test("q201 serving scan partition-prunes on cell with a literal IN-list") {
+    assertLiteralCellPruning("q201_ann_ivf_bq_tuned")
   }
 
   test("partitionedParquet round-trips schema types and column order") {

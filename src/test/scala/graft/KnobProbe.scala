@@ -1,13 +1,16 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, count, lit, sum}
+
 /** Dev tool: the serving-knob-vs-corpus-scale probe (VERDICT r13 #2).
   * [[BuildProbe]] gates the BUILD quality at scale (head hits at the
   * default knob); this probe measures which SERVING knob setting
   * restores the base-SF hit band once the corpus grows 10× — the
-  * q182 beam sweep and the q191 oversampling sweep, both extended
-  * PAST their registered widths via the parametric probe hooks
-  * (`Clustering.beamSweep` / `Vectors.bqSweepProbe`), at the
-  * base dir and at the `make_scale.py` replica.
+  * q182 beam sweep, the q191 oversampling sweep and the q187/q201
+  * IVF×BQ serve, all extended PAST their registered settings through
+  * the parametric builders those queries are made of
+  * (`Clustering.beamSweep`, `Vectors.bqSweep`, `Vectors.ivfBqServed`),
+  * at the base dir and at the `make_scale.py` replica.
   *
   * Measured (round 14) — the knob story splits by HOW the corpus
   * grows:
@@ -58,7 +61,7 @@ object KnobProbe {
             println(s"""BEAM {"dir":"$dir","hops":$hp,"beam":$b,"n_results":$n,"hits":$h}""")
           }
       }
-      val bq = rows(queries.Vectors.bqSweepProbe(spark, dir, widths))
+      val bq = rows(queries.Vectors.bqSweep(spark, dir, widths))
       bq.foreach { case (c, n, h) =>
         println(s"""BQC {"dir":"$dir","c_width":$c,"results":$n,"hits":$h}""")
       }
@@ -67,14 +70,14 @@ object KnobProbe {
       // the default — does cell pruning cap what oversampling recovers?
       // Plus one nprobe=4 point at the widest C, which attributes any
       // remaining gap to the cell-recall ceiling vs the Hamming rank.
-      val ivfBq = rows(queries.Vectors.ivfBqSweepProbe(spark, dir, Seq(64, 128, 256)))
-      ivfBq.foreach { case (c, n, h) =>
-        println(s"""IVFBQ {"dir":"$dir","nprobe":2,"c_width":$c,"results":$n,"hits":$h}""")
+      def ivfBqSweep(nprobe: Int, cWidths: Seq[Int]) = cWidths.map { c =>
+        val r = queries.Vectors.ivfBqServed(spark, dir, nprobe, c)
+          .agg(count(lit(1)), sum(col("hit")).cast("long")).head()
+        println(s"""IVFBQ {"dir":"$dir","nprobe":$nprobe,"c_width":$c,"results":${r.getLong(0)},"hits":${r.getLong(1)}}""")
+        (c.toLong, r.getLong(0), r.getLong(1))
       }
-      val ivfBq4 = rows(queries.Vectors.ivfBqSweepProbe(spark, dir, Seq(256), nprobe = 4))
-      ivfBq4.foreach { case (c, n, h) =>
-        println(s"""IVFBQ {"dir":"$dir","nprobe":4,"c_width":$c,"results":$n,"hits":$h}""")
-      }
+      val ivfBq = ivfBqSweep(2, Seq(64, 128, 256))
+      val ivfBq4 = ivfBqSweep(4, Seq(256))
       dir -> (bm.map(t => t._1 -> t._3).toMap, bq.map(t => t._1 -> t._3).toMap,
         ivfBq.map(t => t._1 -> t._3).toMap, ivfBq4.map(t => t._1 -> t._3).toMap)
     }.toMap

@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{ConnectedComponents, Multimodal, Upsert}
-import graft.sources.PaginatedSource
 import Multimodal.{MediaMeta, MediaRow}
 
-/** Multimodal plumbing, paginated source adapter, keyed upsert. */
+/** Multimodal plumbing, keyed upsert. */
 class OperatorsSpec extends SparkSuite {
   import spark.implicits._
 
@@ -236,25 +235,6 @@ class OperatorsSpec extends SparkSuite {
     val schema = ds.schema
     assert(schema("content").dataType.typeName == "binary")
     assert(schema("meta").dataType.typeName == "struct")
-  }
-
-  test("paginated source: walks pages until short page, capped by maxPages") {
-    val universe = (0 until 230).map(i => s"match-$i")
-    def page(start: Int, count: Int): Seq[String] = universe.slice(start, start + count)
-    assert(PaginatedSource.fetchIdPages(page, 50, 10).size == 230)
-    assert(PaginatedSource.fetchIdPages(page, 50, 4).size == 200) // reference's 4x50 cap
-  }
-
-  test("paginated source: distributed detail fetch with retry") {
-    val ids = (0 until 40).map(i => s"id-$i")
-    val out = PaginatedSource.fetchDetails[String, (String, Int)](
-      spark, ids, id => (id, id.length), parallelism = 4)
-    assert(out.rdd.getNumPartitions == 4)
-    assert(out.collect().toMap.keySet == ids.toSet)
-    // retry: flaky fn succeeds within attempts (deterministic: fails on first call per value)
-    var calls = 0
-    val got = PaginatedSource.withRetry(3)(() => { calls += 1; if (calls < 3) sys.error("429"); "ok" })
-    assert(got == "ok" && calls == 3)
   }
 
   test("upsert latest-wins keeps highest (version, tiebreak) per key") {
