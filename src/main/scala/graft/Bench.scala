@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
-import org.json4s.{JDecimal, JInt, JObject, JString, JValue}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.json4s.{JArray, JDecimal, JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods.compact
 
 /** Driver-run benchmark: a full JSON line with per-query wall-clock
@@ -35,8 +37,23 @@ import org.json4s.jackson.JsonMethods.compact
   * swing ±50% (observed same-commit totals of 64 s and 103 s), and
   * the minimum is the standard low-noise estimator of a deterministic
   * computation's cost.
+  *
+  * Every run also records the generated classes the JVM compiled while
+  * it ran and their summed compile seconds (all threads), so a codegen
+  * cache that thrashes shows as a counter instead of as wall-clock.
   */
 object Bench {
+  /** One timed run of one query: wall-clock (-1 on failure), and the
+    * stop-the-world GC seconds, codegen compiles and compile seconds
+    * spent while it ran. */
+  private final case class Sample(elapsed: Double, gcSec: Double,
+    compiles: Long, compileSec: Double)
+
+  /** Generated classes compiled so far in this JVM and their summed
+    * compile nanoseconds, over all threads. */
+  private[graft] def codegenTotals(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = BenchSession.create()
@@ -80,8 +97,9 @@ object Bench {
     val benchStart = System.nanoTime()
     def spentSec: Double = (System.nanoTime() - benchStart) / 1e9
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double) = {
+        : Sample = {
       val gc0 = gcMillis()
+      val (compiles0, compileNs0) = codegenTotals()
       val t0 = System.nanoTime()
       val elapsed =
         try { materialize(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
@@ -93,13 +111,15 @@ object Bench {
             errors += name -> e.toString.take(200)
             -1.0
         }
-      val gcSec = (gcMillis() - gc0) / 1e3
+      val (compiles1, compileNs1) = codegenTotals()
+      val sample = Sample(elapsed, (gcMillis() - gc0) / 1e3,
+        compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9)
       spark.sharedState.cacheManager.clearCache()
-      (elapsed, gcSec)
+      sample
     }
 
     val samples = scala.collection.mutable.LinkedHashMap(
-      sorted.map { case (name, _) => name -> scala.collection.mutable.ListBuffer.empty[(Double, Double)] }: _*)
+      sorted.map { case (name, _) => name -> scala.collection.mutable.ListBuffer.empty[Sample] }: _*)
     var fullPasses = 0
     // Pass 1 always runs in full. Later passes run SLOWEST-FIRST with
     // a per-query budget gate: the queries an outlier distorts most
@@ -111,7 +131,7 @@ object Bench {
       val order =
         if (run == 1) sorted
         else sorted.sortBy { case (name, _) =>
-          -samples(name).map(_._1).foldLeft(0.0)(math.max) }
+          -samples(name).map(_.elapsed).foldLeft(0.0)(math.max) }
       var complete = true
       order.foreach { case (name, fn) =>
         if (run == 1 || spentSec < budgetSec) samples(name) += runOne(name, fn)
@@ -137,8 +157,8 @@ object Bench {
       // exact case this exists for — would still emit single-shots).
       val graceEnd = spentSec + budgetSec / 4.0
       val slowestFirst = samples.toSeq
-        .filter { case (_, ss) => ss.forall(_._1 >= 0) }
-        .sortBy { case (_, ss) => -ss.map(_._1).min }
+        .filter { case (_, ss) => ss.forall(_.elapsed >= 0) }
+        .sortBy { case (_, ss) => -ss.map(_.elapsed).min }
       val byName = sorted.toMap
       slowestFirst.foreach { case (name, ss) =>
         if (spentSec < graceEnd) ss += runOne(name, byName(name))
@@ -151,7 +171,8 @@ object Bench {
     // reports -1 (visible in errors).
     val results = sorted.map { case (name, _) =>
       val ts = samples(name)
-      name -> (if (ts.exists(_._1 < 0)) (-1.0, -1.0) else ts.minBy(_._1))
+      name -> (if (ts.exists(_.elapsed < 0)) (-1.0, -1.0)
+               else { val m = ts.minBy(_.elapsed); (m.elapsed, m.gcSec) })
     }
     // ---- streaming micro-bench (one AvailableNow pass per path) ----
     // rows/sec for each streaming maintenance path over sf-derived
@@ -269,7 +290,7 @@ object Bench {
     // Round-over-round comparisons read warm_serve_total +
     // cold_stage_total, never the mixed `value` total.
     val warmMins = sorted.map { case (name, _) =>
-      val later = samples(name).drop(1).map(_._1).filter(_ >= 0)
+      val later = samples(name).drop(1).map(_.elapsed).filter(_ >= 0)
       if (later.isEmpty) None else Some(later.min)
     }
     val stageTimings = graft.operators.Staged.buildTimings.toSeq.sortBy(-_._2)
@@ -279,7 +300,19 @@ object Bench {
       "n_errors" -> JInt(errors.size),
       "cold_stage_total" -> r3(stageTimings.map(_._2).sum),
       "warm_serve_total" -> r3(warmMins.flatten.sum),
-      "warm_covered" -> JInt(warmMins.count(_.isDefined)))
+      "warm_covered" -> JInt(warmMins.count(_.isDefined)),
+      // Codegen compiles summed over pass 1 (cold) and over every later
+      // run (warm): a warm total near the cold one means the generated
+      // class cache is evicting the working set.
+      "compiles_cold" -> JInt(samples.values.map(_.head.compiles).sum),
+      "compiles_warm" -> JInt(samples.values.flatMap(_.drop(1)).map(_.compiles).sum))
+    // Metaspace holds the generated classes the codegen cache keeps
+    // alive; read at the end so the cost of the cache size is visible.
+    val metaspaceMb = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+        .find(_.getName == "Metaspace").fold(-1.0)(_.getUsage.getUsed / 1048576.0)
+    }
     // streaming: rows/sec per streaming path (VERDICT r10 #5);
     // stage_build_sec: per-stage build seconds (#6: stage builds are
     // engine work the min-of-runs per-query numbers exclude — this map
@@ -289,7 +322,11 @@ object Bench {
       "streaming" -> obj(streaming)(r3),
       "stage_build_sec" -> obj(stageTimings)(r3),
       "runs_per_query" -> obj(samples)(ss => JInt(ss.size)),
+      "metaspace_mb" -> r3(metaspaceMb),
       "gc_sec" -> obj(results) { case (_, g) => r3(g) },
+      // Per query, one entry per run in run order (pass 1 first).
+      "compiles" -> obj(samples)(ss => JArray(ss.map(s => JInt(s.compiles): JValue).toList)),
+      "compile_sec" -> obj(samples)(ss => JArray(ss.map(s => r3(s.compileSec)).toList)),
       "queries" -> obj(results) { case (v, _) => r3(v) })))
     println(full)
     // The driver snapshot keeps only a stdout TAIL, which amputated

@@ -7,6 +7,13 @@ import org.apache.spark.sql.SparkSession
   * ScaleProbe, BuildProbe, KnobProbe) all take their session from
   * here, so the config the specs run under is the config the bench
   * measures and the plans are dumped from.
+  *
+  * One of its confs is static per JVM, not per session:
+  * `spark.sql.codegen.cache.maxEntries` is read once, when the first
+  * code generation in the JVM initialises Spark's generated-class
+  * cache. It holds only because every session in this repo comes from
+  * here; a JVM whose first session is built elsewhere keeps Spark's
+  * default of 100 classes and recompiles on every warm query.
   */
 object BenchSession {
   /** The pinned session at `SPARK_GRAFT_CPUS` local slots, defaulting
@@ -36,6 +43,13 @@ object BenchSession {
       // floor keeps small hot shuffles at full parallelism and is
       // invisible at scale, where partitions are GB-sized.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+      // Spark keeps 100 generated classes per JVM by default, and one
+      // hierarchical k-means build alone compiles about 108, so a warm
+      // query evicted its own classes and recompiled them (4307
+      // compiles in a warm sf0.1 registry pass at 100 entries, 174 at
+      // 8192). A full cold pass holds about 3.6k distinct classes:
+      // 8192 keeps the working set with a bounded metaspace.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 }

@@ -8,7 +8,7 @@ package graft
   * build timing (keys embed the dir, so one JVM holds both sides) and
   * the Spark jobs each build ran itself (nested builds count toward
   * their own key), read from the `Staged.StageProperty` local property
-  * on every job start.
+  * on every job start, and the codegen compiles of each dir pass.
   * The 10x/1x ratio of a staged key is the BUILD scale story for that
   * artifact — for `q174graph|…` it must be ~linear now that the hub
   * layer is NN-Descent + constant-K super-hubs instead of a hub-pair
@@ -37,11 +37,17 @@ object BuildProbe {
         // family whose 10x ratio was previously unmeasured.
         "q130_bpe_merges")
 
+    // One CODEGEN line per dir pass: the generated classes compiled
+    // during the pass and their summed compile seconds (all threads).
     Seq(base, scaled).foreach { dir =>
+      val (compiles0, compileNs0) = Bench.codegenTotals()
       faces.foreach { name =>
         SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
       }
+      val (compiles1, compileNs1) = Bench.codegenTotals()
+      val compileSec = (compileNs1 - compileNs0) / 1e9
+      println(f"""CODEGEN {"dir":"$dir","compiles":${compiles1 - compiles0},"compile_s":$compileSec%.3f}""")
     }
     org.apache.spark.ListenerBusDrain(spark.sparkContext)
     graft.operators.Staged.buildTimings.toSeq.sortBy(_._1).foreach {

@@ -93,6 +93,28 @@ class ClusteringSpec extends SparkSuite {
       "the hierarchical build left cached data behind")
   }
 
+  test("a repeated hierarchical build reuses its generated classes") {
+    // BenchSession sizes the JVM's generated-class cache above a build's
+    // working set (about 108 classes); at Spark's default of 100 entries
+    // the second build evicted and recompiled 48-66 of them. AQE is off
+    // here because it re-plans in stage-completion order, so a repeated
+    // build sometimes generates 6 new stage classes; with a fixed plan
+    // every compile of the second build is a cache miss.
+    def build(): Unit = graft.queries.Clustering.hierBuild(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try {
+      build()
+      val compiles0 = Bench.codegenTotals()._1
+      build()
+      val recompiled = Bench.codegenTotals()._1 - compiles0
+      info(s"the second build compiled $recompiled classes")
+      assert(recompiled <= 5, s"the second build compiled $recompiled classes")
+    } finally spark.conf.set(aqe, saved)
+  }
+
   test("hierarchical clustering: plan-literal/driver centroid state is corpus-independent; cluster count is not") {
     // The plan may carry ONLY the constant coarse centroids as
     // literals (MinK sqdist_f calls against literal arrays); the fine

@@ -7,7 +7,7 @@
 # through a round. This script runs both against the base sf0.1 dir
 # and the make_scale.py 10x replica and records GATES_r<N>.json at the
 # repo root: per-probe exit status plus every measured gate line
-# (STAGE/HITS/BEAM/BQC/IVFBQ/SCALE), so the round-close record PROVES
+# (STAGE/HITS/CODEGEN/BEAM/BQC/IVFBQ/SCALE), so the round-close record PROVES
 # the gates ran and what they measured. Exit non-zero iff any gate
 # failed. Round 16 (VERDICT r15 #3 + ADVICE r15): ScaleProbe joined
 # the loop — its measured 10x/1x warm-serve ratios previously lived
@@ -35,7 +35,7 @@ for probe in BuildProbe KnobProbe ScaleProbe; do
   [ $rc -ne 0 ] && { status=1; tail -20 "$log"; }
   probes_json="${probes_json}${probes_json:+,}\"$probe\":$rc"
   # keep only the measured gate lines (valid JSON after the tag)
-  l=$(grep -E '^(STAGE|HITS|BEAM|BQC|IVFBQ|SCALE) ' "$log" | sed 's/"/\\"/g' |
+  l=$(grep -E '^(STAGE|HITS|CODEGEN|BEAM|BQC|IVFBQ|SCALE) ' "$log" | sed 's/"/\\"/g' |
       awk '{printf "\"%s\",", $0}')
   lines="${lines}${l}"
 done
