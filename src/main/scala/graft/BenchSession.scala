@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   * cache. It holds only because every session in this repo comes from
   * here; a JVM whose first session is built elsewhere keeps Spark's
   * default of 100 classes and recompiles on every warm query.
+  * The cache also keys classes by the executor's class loader, so
+  * `spark.sql.artifact.isolation.enabled` is off: with it on, each new
+  * session (every streaming query's clone) gets a loader of its own and
+  * misses every class compiled before it.
   */
 object BenchSession {
   /** The pinned session at `SPARK_GRAFT_CPUS` local slots, defaulting
@@ -50,6 +54,15 @@ object BenchSession {
       // 8192). A full cold pass holds about 3.6k distinct classes:
       // 8192 keeps the working set with a bounded metaspace.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
+      // Spark keys that cache by class loader too, and with artifact
+      // isolation on (the default) every new session, including the
+      // clone each streaming query runs on, gets its own executor class
+      // loader. So every Incremental.runOnce tick recompiled its
+      // executor classes (29 per perfbench ingest tick), JIT-compiled
+      // them afresh and pinned the old loader in the cache. No session
+      // here adds artifacts, so one shared loader loses nothing: a warm
+      // ingest tick now compiles 1 class.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 }

@@ -30,10 +30,12 @@ class AdaptiveSpec extends SparkSuite {
   test("suite session carries BenchSession's pinned confs") {
     // Specs must run under the session the bench measures: the AQE
     // coalescing floor, the hash-aggregate fallback threshold, UTC,
-    // one shuffle partition per slot and the generated-class cache size.
+    // one shuffle partition per slot, the generated-class cache size and
+    // one executor class loader shared by every session.
     val c = spark.conf
     assert(c.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k")
     assert(c.get("spark.sql.codegen.cache.maxEntries") == "8192")
+    assert(c.get("spark.sql.artifact.isolation.enabled") == "false")
     assert(c.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "65536")
     assert(c.get("spark.sql.session.timeZone") == "UTC")
     assert(c.get("spark.sql.shuffle.partitions").toInt ==

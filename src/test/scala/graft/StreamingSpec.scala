@@ -42,26 +42,26 @@ class StreamingSpec extends SparkSuite {
     assert(streaming == batch)
   }
 
+  private def mk(matchId: String, win: Boolean): RawMatch =
+    RawMatch(matchId, "MASTER-1", processed = false,
+      Some(RawPayload(Some(MatchInfo(Some(420), Some(1800L), Some(1700000000000L),
+        Some(1700000100000L), Some(Seq(Participant(
+          Some("MASTER-1"), Some("Agurin"), Some("EUW"), None, Some("Ahri"),
+          Some(100), Some(win), Some(5), Some(2), Some(5),
+          Some(100), Some(0), Some(10000), Some(9000),
+          Some(0), Some(0), Some(0), Some(0), Some(0), Some(0), Some(0)))))))),
+      // ingest audit timestamp — drives the dedup watermark
+      Some(new java.sql.Timestamp(1700000200000L)))
+
+  private def summoners = Seq(
+    Summoner("MASTER-1", "Agurin#EUW", "europe", "euw1", 500, 1, None, None, None)).toDF()
+
   test("file-based incremental pipeline: bronze -> silver + gold, exactly-once dedup") {
     val tmp = Files.createTempDirectory("graft_stream").toString
     val bronzeDir = s"$tmp/bronze"
     val silverDir = s"$tmp/silver"
     val goldDir = s"$tmp/gold"
     val ckpt = s"$tmp/ckpt"
-
-    def mk(matchId: String, win: Boolean): RawMatch =
-      RawMatch(matchId, "MASTER-1", processed = false,
-        Some(RawPayload(Some(MatchInfo(Some(420), Some(1800L), Some(1700000000000L),
-          Some(1700000100000L), Some(Seq(Participant(
-            Some("MASTER-1"), Some("Agurin"), Some("EUW"), None, Some("Ahri"),
-            Some(100), Some(win), Some(5), Some(2), Some(5),
-            Some(100), Some(0), Some(10000), Some(9000),
-            Some(0), Some(0), Some(0), Some(0), Some(0), Some(0), Some(0)))))))),
-        // ingest audit timestamp — drives the dedup watermark
-        Some(new java.sql.Timestamp(1700000200000L)))
-
-    val summoners = Seq(
-      Summoner("MASTER-1", "Agurin#EUW", "europe", "euw1", 500, 1, None, None, None)).toDF()
 
     // batch 1: two matches + a duplicate matchId (must dedup)
     Seq(mk("M1", win = true), mk("M2", win = false), mk("M1", win = true))
@@ -102,6 +102,30 @@ class StreamingSpec extends SparkSuite {
     val silverBatches = new java.io.File(silverDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName).sorted
     assert(silverBatches.length >= 2 && silverBatches.head == "batch=0")
+  }
+
+  test("a repeated incremental tick reuses its generated classes") {
+    // Each runOnce is a new streaming query on a cloned session. With
+    // Spark's artifact isolation on, every clone got its own executor
+    // class loader, and the generated-class cache is keyed by loader,
+    // so each tick recompiled the classes of the tick before (28 here).
+    // BenchSession turns isolation off and a warm tick reuses them all.
+    val tmp = Files.createTempDirectory("graft_stream_codegen").toString
+    val (bronzeDir, ckpt) = (s"$tmp/bronze", s"$tmp/ckpt")
+    val dims = summoners
+    def tick(i: Int): Unit = {
+      Seq(mk(s"T$i", win = i % 2 == 0)).toDF().write.mode("append").parquet(bronzeDir)
+      Incremental.runOnce(spark, bronzeDir, dims, s"$tmp/silver", s"$tmp/gold", ckpt)
+        .awaitTermination()
+    }
+    tick(0)
+    tick(1)
+    val compiles0 = Bench.codegenTotals()._1
+    tick(2)
+    val recompiled = Bench.codegenTotals()._1 - compiles0
+    info(s"the third tick compiled $recompiled classes")
+    assert(recompiled <= 5, s"the third tick compiled $recompiled classes")
+    assert(Incremental.readGold(spark, s"$tmp/gold").get.head().getAs[Long]("games") == 3)
   }
 
   test("gold merge is idempotent under at-least-once batch retry") {
