@@ -40,14 +40,20 @@ import org.json4s.jackson.JsonMethods.compact
   *
   * Every run also records the generated classes the JVM compiled while
   * it ran and their summed compile seconds (all threads), so a codegen
-  * cache that thrashes shows as a counter instead of as wall-clock.
+  * cache that thrashes shows as a counter instead of as wall-clock, and
+  * the Spark jobs its construct phase started (building the DataFrame:
+  * eager collects, first-touch stage builds, schema reads).
   */
 object Bench {
   /** One timed run of one query: wall-clock (-1 on failure), and the
     * stop-the-world GC seconds, codegen compiles and compile seconds
-    * spent while it ran. */
+    * spent while it ran, and the jobs its construct phase started. */
   private final case class Sample(elapsed: Double, gcSec: Double,
-    compiles: Long, compileSec: Double)
+    compiles: Long, compileSec: Double, constructJobs: Long)
+
+  /** SparkContext local property set while a query's DataFrame is
+    * being built: a job that carries it is a construct-time job. */
+  private val ConstructProperty = "graft.construct"
 
   /** Generated classes compiled so far in this JVM and their summed
     * compile nanoseconds, over all threads. */
@@ -94,15 +100,29 @@ object Bench {
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
 
+    val constructJobs = new java.util.concurrent.atomic.AtomicLong
+    val sc = spark.sparkContext
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(ConstructProperty) != null)
+          constructJobs.incrementAndGet(): Unit
+    })
+
     val benchStart = System.nanoTime()
     def spentSec: Double = (System.nanoTime() - benchStart) / 1e9
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Sample = {
       val gc0 = gcMillis()
       val (compiles0, compileNs0) = codegenTotals()
+      val jobs0 = constructJobs.get
       val t0 = System.nanoTime()
       val elapsed =
-        try { materialize(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+        try {
+          sc.setLocalProperty(ConstructProperty, name)
+          val df = try fn(spark, sfDir) finally sc.setLocalProperty(ConstructProperty, null)
+          materialize(df)
+          (System.nanoTime() - t0) / 1e9
+        }
         catch {
           case e: Throwable =>
             // class+message, not just the class: round 9 recorded bare
@@ -112,8 +132,10 @@ object Bench {
             -1.0
         }
       val (compiles1, compileNs1) = codegenTotals()
+      // job-start events arrive asynchronously: count after the bus drains
+      scala.util.Try(org.apache.spark.ListenerBusDrain(sc))
       val sample = Sample(elapsed, (gcMillis() - gc0) / 1e3,
-        compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9)
+        compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9, constructJobs.get - jobs0)
       spark.sharedState.cacheManager.clearCache()
       sample
     }
@@ -214,7 +236,7 @@ object Bench {
       val nDocs = docs.count()
       docs.write.parquet(s"$tmp/docs")
       rate("corpus_ingest", nDocs) {
-        val schema = spark.read.parquet(s"$tmp/docs").schema
+        val schema = graft.operators.ParquetRead.sourceSchema(spark, s"$tmp/docs")
         val in = spark.readStream.schema(schema).parquet(s"$tmp/docs")
         graft.streaming.CorpusIngest.curatedStream(in)
           .writeStream.format("parquet")
@@ -305,7 +327,10 @@ object Bench {
       // run (warm): a warm total near the cold one means the generated
       // class cache is evicting the working set.
       "compiles_cold" -> JInt(samples.values.map(_.head.compiles).sum),
-      "compiles_warm" -> JInt(samples.values.flatMap(_.drop(1)).map(_.compiles).sum))
+      "compiles_warm" -> JInt(samples.values.flatMap(_.drop(1)).map(_.compiles).sum),
+      // Construct-time Spark jobs, summed the same way.
+      "construct_jobs_cold" -> JInt(samples.values.map(_.head.constructJobs).sum),
+      "construct_jobs_warm" -> JInt(samples.values.flatMap(_.drop(1)).map(_.constructJobs).sum))
     // Metaspace holds the generated classes the codegen cache keeps
     // alive; read at the end so the cost of the cache size is visible.
     val metaspaceMb = {
@@ -327,6 +352,8 @@ object Bench {
       // Per query, one entry per run in run order (pass 1 first).
       "compiles" -> obj(samples)(ss => JArray(ss.map(s => JInt(s.compiles): JValue).toList)),
       "compile_sec" -> obj(samples)(ss => JArray(ss.map(s => r3(s.compileSec)).toList)),
+      "construct_jobs" ->
+        obj(samples)(ss => JArray(ss.map(s => JInt(s.constructJobs): JValue).toList)),
       "queries" -> obj(results) { case (v, _) => r3(v) })))
     println(full)
     // The driver snapshot keeps only a stdout TAIL, which amputated

@@ -105,7 +105,7 @@ object Maintenance {
     }
     fs.delete(tmp, true)
     fs.delete(old, true)
-    spark.read.parquet(dir)
+    graft.operators.ParquetRead.table(spark, dir)
       .repartition(col(partitionCol))
       .write.mode("overwrite").partitionBy(partitionCol)
       .parquet(tmp.toString)

@@ -265,7 +265,8 @@ object MergeInto {
         .foreach { bp => if (!chosen.contains(bp.getName)) chosen(bp.getName) = bp }
     }
     if (chosen.isEmpty) None
-    else Some(spark.read.parquet(chosen.values.map(_.toString).toSeq: _*))
+    // a layout's schema is fixed by its keys and aggregates
+    else Some(ParquetRead(spark, s"layout|$dir", chosen.values.map(_.toString).toSeq: _*))
   }
 
   /** Retention sweep: each bucket keeps its TWO newest complete

@@ -128,15 +128,15 @@ object Staged {
   def parquet(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     val holder = memo.computeIfAbsent(key, k => new Holder(() => timed(s, k) {
       val p = stagePath(k)
-      build.write.mode("overwrite").parquet(p)
-      schemaMemo.put(k, s.read.parquet(p).schema)
+      val df = build
+      df.write.mode("overwrite").parquet(p)
+      // the schema it wrote: a stage never changes after it is written,
+      // and Spark's writer stores this schema in the footer, so no
+      // read of the stage runs a footer-reading job to infer it
+      ParquetRead.record(s"stage|$k", df.schema)
       p
     }))
-    val path = evaluate(key, holder)
-    // the schema inferred once at build time: a stage never changes
-    // after it is written, and inferring again on every read would
-    // run a footer-reading Spark job per serve
-    s.read.schema(schemaMemo.get(key)).parquet(path)
+    ParquetRead(s, s"stage|$key", evaluate(key, holder))
   }
 
   /** Like [[parquet]] but hive-layout-partitioned by `partCol` — one
@@ -147,39 +147,33 @@ object Staged {
     * of directories out of the whole corpus.
     *
     * Caveat baked in here so callers can't get it wrong: a partition
-    * column round-trips through DIRECTORY-NAME INFERENCE (an integral
-    * `cell` comes back IntegerType, and lands at the END of the
-    * schema). The read path re-casts it to its original type and
+    * column round-trips through DIRECTORY NAMES (inference alone would
+    * bring an integral `cell` back as IntegerType, at the END of the
+    * schema). The read path hands the reader the original type and
     * restores the original column order, so consumers and oracle
-    * schemas see the exact pre-staging shape; literal filters still
-    * prune because Catalyst unwraps the cast over the int partition
-    * attribute (UnwrapCastInBinaryComparison). */
+    * schemas see the exact pre-staging shape, and literal filters on
+    * the column prune at listing time. */
   def partitionedParquet(s: SparkSession, key: String, partCol: String)
       (build: => DataFrame): DataFrame = {
     // Namespaced key: a caller-supplied key that collides with a plain
     // parquet() stage must NOT silently serve the unpartitioned layout
-    // (no pruning, and no schemaMemo entry → NPE on read). The
-    // namespace also makes the partition column part of the identity,
-    // so the same table staged under two layouts stays two stages.
+    // (no pruning). The namespace also makes the partition column part
+    // of the identity, so the same table staged under two layouts stays
+    // two stages.
     val nsKey = s"partitioned[$partCol]|$key"
     val holder = memo.computeIfAbsent(nsKey, k => new Holder(() => timed(s, k) {
       val p = stagePath(k)
       val df = build
-      schemaMemo.put(k, df.schema)
       df.write.mode("overwrite").partitionBy(partCol).parquet(p)
+      ParquetRead.record(s"stage|$k", df.schema)
       p
     }))
     val path = evaluate(nsKey, holder)
-    val orig = schemaMemo.get(nsKey)
-    require(orig != null,
-      s"staged path for '$nsKey' exists without a recorded schema — memo/schemaMemo out of sync")
-    val raw = s.read.parquet(path)
+    // Read with the recorded pre-staging schema, so the partition
+    // column's directory values parse as its original type; the reader
+    // still moves a partition column to the end, so restore the order.
     import org.apache.spark.sql.functions.col
-    raw.select(orig.fields.map(f =>
-      if (f.name == partCol) col(f.name).cast(f.dataType).as(f.name)
-      else col(f.name)).toIndexedSeq: _*)
+    ParquetRead(s, s"stage|$nsKey", path)
+      .select(ParquetRead.recorded(s"stage|$nsKey").fieldNames.toIndexedSeq.map(col): _*)
   }
-
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.operators.MergeInto
+import graft.operators.{MergeInto, ParquetRead}
 
 /** STREAMING NAVIGABLE-GRAPH MAINTENANCE — q175's frozen-layer attach
   * run as a stream instead of a batch job: delta vectors arrive
@@ -99,7 +99,7 @@ object GraphIngest {
   def runOnce(spark: SparkSession, deltaDir: String, graphDir: String,
       checkpointDir: String, baseM: DataFrame, bHub: DataFrame,
       bSH: DataFrame): StreamingQuery = {
-    val schema = spark.read.parquet(deltaDir).schema
+    val schema = ParquetRead.sourceSchema(spark, deltaDir)
     val events = spark.readStream.schema(schema).parquet(deltaDir)
       .withWatermark("timestamp", DedupDelay)
       .dropDuplicatesWithinWatermark("vec_id")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.domain.MatchTransform
-import graft.operators.MergeInto
+import graft.operators.{MergeInto, ParquetRead}
 
 /** The reference's micro-batch incremental pipeline (SURVEY.md §2.7) as
   * Structured Streaming: the per-document `processed: False→True` flag
@@ -84,7 +84,7 @@ object Incremental {
     // executes on a cloned session whose function registry is copied at
     // start time.
     graft.functions.NormalizeNFKC.register(spark)
-    val schema = spark.read.parquet(bronzeDir).schema
+    val schema = ParquetRead.sourceSchema(spark, bronzeDir)
     val bronze = spark.readStream.schema(schema).parquet(bronzeDir)
       // exactly-once per match within the watermark horizon: replaces
       // the unique index + exists-check, with state that EVICTS.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{LogQuantile, MergeInto}
+import graft.operators.{LogQuantile, MergeInto, ParquetRead}
 
 /** Streaming quantile serving — [[graft.operators.LogQuantile]] wired
   * into the same `foreachBatch` + versioned-bucket gold discipline as
@@ -51,7 +51,7 @@ object QuantileServe {
       valueCol: String,
       sketchDir: String,
       checkpointDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(bronzeDir).schema
+    val schema = ParquetRead.sourceSchema(spark, bronzeDir)
     val bronze = spark.readStream.schema(schema).parquet(bronzeDir)
     bronze.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.operators.MergeInto
+import graft.operators.{MergeInto, ParquetRead}
 
 /** STREAMING TOMBSTONE INGESTION for the ANN serving index — the
   * maintenance path of q163/q167 run as a stream instead of a batch
@@ -152,7 +152,7 @@ object TombstoneIngest {
     * [[Incremental.runOnce]] for the late-data contract. */
   def runOnce(spark: SparkSession, deletesDir: String, indexDir: String,
       checkpointDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(deletesDir).schema
+    val schema = ParquetRead.sourceSchema(spark, deletesDir)
     val events = spark.readStream.schema(schema).parquet(deletesDir)
       .withWatermark("timestamp", DedupDelay)
       .dropDuplicatesWithinWatermark("vec_id")

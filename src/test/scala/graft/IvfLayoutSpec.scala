@@ -18,11 +18,12 @@ class IvfLayoutSpec extends SparkSuite {
     "PartitionFilters: \\[[^\\]]*\\]".r.findAllIn(plan).toSeq
 
   // The literal push-down this spec exists to pin: a cell IN-list of
-  // actual values inside PartitionFilters (e.g. "cell#42 IN
-  // (0,97,194)"). `isnotnull(cell#42)` from a bare equi-join must NOT
-  // satisfy it — that was exactly the regression shape the first
-  // version of this spec could not catch.
-  private val cellInList = "cell#\\d+ IN \\(\\d+(,\\d+)*\\)".r
+  // actual values inside PartitionFilters (e.g. "cell#42L IN
+  // (0,97,194)"; the attribute carries its type suffix, L for the
+  // bigint cell the index is staged with). `isnotnull(cell#42L)` from a
+  // bare equi-join must NOT satisfy it — that was exactly the
+  // regression shape the first version of this spec could not catch.
+  private val cellInList = "cell#\\d+L? IN \\(\\d+(,\\d+)*\\)".r
 
   private def assertLiteralCellPruning(name: String): Unit = {
     val df = SparkEntry.queries(name)(spark, sfDir)
@@ -67,5 +68,34 @@ class IvfLayoutSpec extends SparkSuite {
     val plan = probed.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cell[^\\]]*\\]".r.findFirstIn(plan).isDefined,
       s"no partition filter:\n$plan")
+  }
+
+  test("a stage's recorded schema is the one a footer read infers (serve and IVF stages)") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.col
+    Seq("q25_domain_gold", "q174_ann_graph_search", "q103_ann_ivf_sq")
+      .foreach(q => SparkEntry.queries(q)(spark, sfDir))
+    val keys = graft.operators.Staged.buildTimings.keys.filter(_.contains(sfDir)).toSeq.sorted
+    assert(keys.exists(_.startsWith("q174graph|")) &&
+      keys.exists(_.startsWith("partitioned[cell]|ivfsq_idx|")), s"stages built: $keys")
+    val Partitioned = """partitioned\[(.+?)\]\|(.+)""".r
+    keys.foreach {
+      case k @ Partitioned(partCol, key) =>
+        val staged = graft.operators.Staged.partitionedParquet(spark, key, partCol)(sys.error(s"$k rebuilt"))
+        val dir = new Path(staged.inputFiles.head).getParent.getParent.toString
+        val inferred = spark.read.parquet(dir)
+        // inference types the partition column from its directory names
+        // and puts it last; every data column must match as written
+        assert(inferred.schema.filter(_.name != partCol) == staged.schema.filter(_.name != partCol),
+          s"$k: recorded ${staged.schema} vs footer ${inferred.schema}")
+        val cells = inferred.select(col(partCol).cast(staged.schema(partCol).dataType))
+        assert(staged.select(partCol).exceptAll(cells).isEmpty &&
+          cells.exceptAll(staged.select(partCol)).isEmpty, s"$k: partition values differ")
+      case k =>
+        val staged = graft.operators.Staged.parquet(spark, k)(sys.error(s"$k rebuilt"))
+        val inferred = spark.read.parquet(new Path(staged.inputFiles.head).getParent.toString)
+        assert(inferred.schema == staged.schema,
+          s"$k: recorded ${staged.schema} vs footer ${inferred.schema}")
+    }
   }
 }

@@ -158,8 +158,6 @@ class PlanHygieneSpec extends SparkSuite {
     // rank itself, this build ran 139 jobs; over the one staged hub
     // table it runs 25. The budget catches a branch that derives the
     // hub layer again.
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.queries.Clustering
     val tmp = java.nio.file.Files.createTempDirectory("graft_navjobs").toString
     val baseM = Clustering.navPopulations(spark, sfDir)._1
@@ -168,20 +166,24 @@ class PlanHygieneSpec extends SparkSuite {
     val members = spark.read.parquet(s"$tmp/members")
     val knnE = spark.read.parquet(s"$tmp/knn")
     val hubs = Clustering.navFrozenLayers(spark, sfDir)._1
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       Clustering.navGraphBuild(members, knnE, hubs)
         .write.format("noop").mode("overwrite").save()
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= 30,
-      s"navigable-graph build ran ${jobs.get} jobs (budget 30)")
+    }.size
+    assert(jobs <= 30, s"navigable-graph build ran $jobs jobs (budget 30)")
+  }
+
+  test("a repeated construct of q01, q12 and q23 starts no Spark job") {
+    // Their construct phase is table reads only, and a table read whose
+    // schema the JVM already knows starts no job. Inferring it again
+    // cost one footer-reading job per table read (2, 2 and 1 here).
+    Seq("q01_flagship_customer_stats", "q12_tiered_entity_resolution",
+        "q23_window_analytics").foreach { name =>
+      val fn = SparkEntry.queries(name)
+      fn(spark, sfDir)
+      val jobs = jobsDuring(fn(spark, sfDir))
+      assert(jobs.isEmpty, s"$name: a repeated construct started ${jobs.size} jobs: $jobs")
+    }
   }
 
   test("q197 pair scoring stays dense (r17 batch-3 win guard)") {

@@ -104,4 +104,11 @@ class StagedSpec extends SparkSuite {
     assert(sc.getLocalProperty(Staged.StageProperty) == null,
       "the stage property outlived its build")
   }
+
+  test("a stage build runs no job after its write job") {
+    // The build records the schema it wrote; reading the footer back to
+    // infer it was one more job per stage build.
+    val jobs = jobsDuring(Staged.parquet(spark, "stagedspec_write_only")(spark.range(100).toDF("v")))
+    assert(jobs.size == 1, s"a one-stage build ran ${jobs.size} jobs: $jobs")
+  }
 }

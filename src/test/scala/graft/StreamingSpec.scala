@@ -128,6 +128,20 @@ class StreamingSpec extends SparkSuite {
     assert(Incremental.readGold(spark, s"$tmp/gold").get.head().getAs[Long]("games") == 3)
   }
 
+  test("a repeated gold read starts no Spark job") {
+    // The layout's schema is fixed by its keys and aggregates, so only
+    // the first read of a layout infers it from a footer.
+    val tmp = Files.createTempDirectory("graft_stream_gold_read").toString
+    Seq(mk("G1", win = true), mk("G2", win = false)).toDF()
+      .write.mode("append").parquet(s"$tmp/bronze")
+    Incremental.runOnce(spark, s"$tmp/bronze", summoners, s"$tmp/silver", s"$tmp/gold",
+      s"$tmp/ckpt").awaitTermination()
+    Incremental.readGold(spark, s"$tmp/gold").get
+    val jobs = jobsDuring(Incremental.readGold(spark, s"$tmp/gold").get)
+    assert(jobs.isEmpty, s"a repeated gold read started ${jobs.size} jobs: $jobs")
+    assert(Incremental.readGold(spark, s"$tmp/gold").get.head().getAs[Long]("games") == 2)
+  }
+
   test("gold merge is idempotent under at-least-once batch retry") {
     val tmp = Files.createTempDirectory("graft_retry").toString
     val (silverDir, goldDir) = (s"$tmp/silver", s"$tmp/gold")

@@ -76,4 +76,36 @@ class TablesSpec extends SparkSuite {
       assert(out.select("ts").as[Long].head() == epochUs * 1000L)
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
+
+  test("a table rewritten in place is read with its new schema") {
+    // Table reads reuse the schema the JVM inferred, keyed on the file's
+    // length and modification time: a key on the path alone would read
+    // the rewritten LongType ts as the NTZ it replaced.
+    import spark.implicits._
+    val nanos = epochUs * 1000L
+    val dir = writeEvents(
+      Seq((1L, epochUs, 7L, "click", 1.5, """{"k":1}"""))
+        .toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
+        .select(col("event_id"),
+          timestamp_micros(col("ts_us")).cast(TimestampNTZType).as("ts"),
+          col("user_id"), col("event_type"), col("value"), col("props")))
+    assert(Tables.events(spark, dir).select("ts").as[Long].head() == nanos)
+    assert(Tables.table(spark, dir, "events").schema("ts").dataType == TimestampNTZType)
+    Seq((1L, nanos + 1000L, 7L, "click", 1.5, """{"k":1}"""))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    assert(Tables.table(spark, dir, "events").schema("ts").dataType == LongType)
+    assert(Tables.events(spark, dir).select("ts").as[Long].head() == nanos + 1000L)
+  }
+
+  test("a repeated table read starts no Spark job; a missing table fails as Spark's read does") {
+    import spark.implicits._
+    val dir = writeEvents(Seq((1L, epochUs)).toDF("event_id", "ts"))
+    Tables.table(spark, dir, "events")
+    val jobs = jobsDuring(Tables.table(spark, dir, "events"))
+    assert(jobs.isEmpty, s"a repeated table read started ${jobs.size} jobs: $jobs")
+    val missing = Files.createTempDirectory("graft-tables-missing").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](Tables.orders(spark, missing))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
 }
