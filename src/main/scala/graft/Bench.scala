@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.json4s.{JArray, JDecimal, JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods.compact
 
@@ -38,35 +36,41 @@ import org.json4s.jackson.JsonMethods.compact
   * the minimum is the standard low-noise estimator of a deterministic
   * computation's cost.
   *
-  * Every run also records the generated classes the JVM compiled while
-  * it ran and their summed compile seconds (all threads), so a codegen
-  * cache that thrashes shows as a counter instead of as wall-clock, and
-  * the Spark jobs its construct phase started (building the DataFrame:
-  * eager collects, first-touch stage builds, schema reads).
+  * Every run is recorded by [[Telemetry.measure]], once for its
+  * construct phase and once for its execute phase: the generated
+  * classes the JVM compiled while it ran and their summed compile
+  * seconds (all threads), so a codegen cache that thrashes shows as a
+  * counter instead of as wall-clock; its stop-the-world GC seconds, so
+  * a reader can tell a regressed plan from a noisy heap; and the Spark
+  * jobs its construct phase started.
+  *
+  * The lossless JSON line also lands in `$SPARK_GRAFT_BENCH_OUT`,
+  * which defaults to `BENCH_full.json` for a full-registry run only: a
+  * subset run (the way to time a few queries) writes no file unless
+  * one is named.
   */
 object Bench {
-  /** One timed run of one query: wall-clock (-1 on failure), and the
-    * stop-the-world GC seconds, codegen compiles and compile seconds
-    * spent while it ran, and the jobs its construct phase started. */
-  private final case class Sample(elapsed: Double, gcSec: Double,
-    compiles: Long, compileSec: Double, constructJobs: Long)
+  /** One run of one query: wall-clock (-1 on failure) and what its
+    * construct phase (building the DataFrame: eager collects,
+    * first-touch stage builds, schema reads) and its execute phase
+    * (the noop write) cost. */
+  private final case class Sample(elapsed: Double,
+      construct: Telemetry.Record, execute: Telemetry.Record) {
+    def gcSec: Double = (construct.gcMillis + execute.gcMillis) / 1e3
+    def compiles: Long = construct.compiles + execute.compiles
+    def compileSec: Double = construct.compileSec + execute.compileSec
+    def constructJobs: Long = construct.jobs.size.toLong
+  }
 
-  /** SparkContext local property set while a query's DataFrame is
-    * being built: a job that carries it is a construct-time job. */
-  private val ConstructProperty = "graft.construct"
-
-  /** Generated classes compiled so far in this JVM and their summed
-    * compile nanoseconds, over all threads. */
-  private[graft] def codegenTotals(): (Long, Long) =
-    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+  /** Evaluate a query through the `noop` sink: every output row in
+    * full, nothing kept. */
+  private[graft] def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("WARN")
-
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
 
     // Untimed warmup: JVM + whole-stage-codegen compile + parquet
     // footer reads, so per-query numbers measure the queries.
@@ -89,55 +93,23 @@ object Bench {
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC").map(_.toInt)
       .getOrElse(math.max(780, 6 * sorted.size))
 
-    // Cumulative stop-the-world GC millis across all collectors. The
-    // per-query delta is reported next to wall-clock so a reader of
-    // the bench JSON can tell a regressed plan from a noisy heap (the
-    // driver environment amplifies allocation-heavy queries; gc_sec
-    // makes that amplification visible instead of inferred).
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-
-    val constructJobs = new java.util.concurrent.atomic.AtomicLong
-    val sc = spark.sparkContext
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(ConstructProperty) != null)
-          constructJobs.incrementAndGet(): Unit
-    })
+    // A Throwable, not NonFatal: a query that overflows the stack is
+    // one failed query, not a failed bench.
+    def attempt[T](f: => T): Either[Throwable, T] =
+      try Right(f) catch { case e: Throwable => Left(e) }
 
     val benchStart = System.nanoTime()
     def spentSec: Double = (System.nanoTime() - benchStart) / 1e9
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Sample = {
-      val gc0 = gcMillis()
-      val (compiles0, compileNs0) = codegenTotals()
-      val jobs0 = constructJobs.get
-      val t0 = System.nanoTime()
-      val elapsed =
-        try {
-          sc.setLocalProperty(ConstructProperty, name)
-          val df = try fn(spark, sfDir) finally sc.setLocalProperty(ConstructProperty, null)
-          materialize(df)
-          (System.nanoTime() - t0) / 1e9
-        }
-        catch {
-          case e: Throwable =>
-            // class+message, not just the class: round 9 recorded bare
-            // "IllegalStateException" and cost a full diagnosis cycle
-            // that e.toString ("Recursive update") would have skipped.
-            errors += name -> e.toString.take(200)
-            -1.0
-        }
-      val (compiles1, compileNs1) = codegenTotals()
-      // job-start events arrive asynchronously: count after the bus drains
-      scala.util.Try(org.apache.spark.ListenerBusDrain(sc))
-      val sample = Sample(elapsed, (gcMillis() - gc0) / 1e3,
-        compiles1 - compiles0, (compileNs1 - compileNs0) / 1e9, constructJobs.get - jobs0)
+      val (built, construct) = Telemetry.measure(spark)(attempt(fn(spark, sfDir)))
+      val (ran, execute) = Telemetry.measure(spark)(built.flatMap(df => attempt(materialize(df))))
+      // class+message, not just the class: round 9 recorded bare
+      // "IllegalStateException" and cost a full diagnosis cycle that
+      // e.toString ("Recursive update") would have skipped.
+      ran.left.foreach(e => errors += name -> e.toString.take(200))
       spark.sharedState.cacheManager.clearCache()
-      sample
+      Sample(if (ran.isRight) construct.wallSec + execute.wallSec else -1.0, construct, execute)
     }
 
     val samples = scala.collection.mutable.LinkedHashMap(
@@ -361,11 +333,13 @@ object Bench {
     // also lands in a file (committed per round as BENCH_full_r<N>),
     // and the compact last line folds in the small streaming/stage
     // maps so the tail alone still carries them.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (full + "\n").getBytes("UTF-8")): Unit
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"bench: could not write $outPath: $e") }
+    sys.env.get("SPARK_GRAFT_BENCH_OUT").orElse(Option.when(only.isEmpty)("BENCH_full.json"))
+      .foreach { outPath =>
+        try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+          (full + "\n").getBytes("UTF-8")): Unit
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"bench: could not write $outPath: $e") }
+      }
     // Round 17 (VERDICT r16 #2): the compact line no longer carries the
     // full stage_build_sec map — at 100+ stages with dir-qualified keys
     // it had grown past ~4.5 KB, and the driver's stdout TAIL capture

@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE place a SparkSession is built: Bench, Verify, the test
-  * suites (SparkSuite) and the dev probes (PlanDump, TimeProbe,
-  * ScaleProbe, BuildProbe, KnobProbe) all take their session from
+  * suites (SparkSuite) and the dev mains all take their session from
   * here, so the config the specs run under is the config the bench
   * measures and the plans are dumped from.
   *
@@ -63,6 +62,13 @@ object BenchSession {
       // here adds artifacts, so one shared loader loses nothing: a warm
       // ingest tick now compiles 1 class.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // The events table's `ts` has shipped as parquet TIMESTAMP(NANOS),
+      // which Spark reads only as a raw LongType (see Tables.events).
+      // Pinned here, not set by the events loader, because the conf
+      // changes parquet inference and so every table's schema key:
+      // flipping it mid-session made each table read after the first
+      // events query infer its schema again.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 }

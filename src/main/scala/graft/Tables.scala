@@ -28,7 +28,8 @@ object Tables {
   /** The events table's `ts` column has shipped in two physical shapes
     * across generator versions: parquet TIMESTAMP(NANOS) (unrepresentable
     * in Spark's micros TimestampType — readable only as a raw LongType
-    * via `spark.sql.legacy.parquet.nanosAsLong`) and plain
+    * via `spark.sql.legacy.parquet.nanosAsLong`, which BenchSession
+    * pins) and plain
     * timestamp[us] (surfacing as TIMESTAMP_NTZ when written without a
     * timezone). Every event query does exact integer arithmetic on
     * epoch-NANOS (never double division: 2024 epoch-nanos ≈ 1.7e18 >
@@ -43,7 +44,6 @@ object Tables {
     *    (identity under the UTC sessions all entry points configure).
     *  - TIMESTAMP (tz-aware): an unambiguous instant; take it directly. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(s, d, "events")
     import org.apache.spark.sql.functions.{col, from_utc_timestamp, unix_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

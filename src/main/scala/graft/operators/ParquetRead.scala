@@ -40,7 +40,7 @@ object ParquetRead {
     }
 
   // Session confs that change what parquet inference returns for the
-  // same file (`Tables.events` sets nanosAsLong).
+  // same file.
   private val inferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",

@@ -100,9 +100,9 @@ object Staged {
 
   /** SparkContext local property naming the stage whose build
     * submitted a job: set for the duration of a build, restored to the
-    * enclosing build's key (or cleared) when it ends, so a listener
-    * reads `graft.stage` from `SparkListenerJobStart.properties` and
-    * charges each job to the innermost build. Local properties are
+    * enclosing build's key (or cleared) when it ends, so
+    * `graft.Telemetry` reads it from each job's start event and
+    * charges the job to the innermost build. Local properties are
     * inherited by the threads Spark SQL submits from (broadcast and
     * subquery futures capture them). */
   val StageProperty = "graft.stage"

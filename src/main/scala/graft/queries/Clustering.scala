@@ -466,7 +466,7 @@ object Clustering {
     * scale-independent — adaptive-width md5-hyperplane buckets hold
     * expected bucket size in [16, 32) at any hub count, so ring-only
     * seeding's 10× recall collapse — 0/64 head hits at 1333 hubs,
-    * caught by the BuildProbe gate — cannot recur; per-bucket top-R
+    * caught by the `Probe build` gate — cannot recur; per-bucket top-R
     * is a constant-factor O(#hubs) stage), then 2 unrolled
     * neighbors-of-neighbors rounds densifying across buckets —
     * O(#hubs) total, hub-keyed equi-joins, nothing broadcast;
@@ -482,14 +482,14 @@ object Clustering {
     // corpus (n/clusterSize), so the fixed-cost serving walk's
     // exploration budget must buy more coverage per hop — degree-3
     // hub links left the 10× replica's 1333-hub layer under-explored
-    // (0/64 head hits, BuildProbe gate); degree 6 (×2 symmetrized)
+    // (0/64 head hits, `Probe build` gate); degree 6 (×2 symmetrized)
     // doubles per-hop fanout at constant per-node cost. Still the
     // constant-degree contract — 6 never grows with n.
     val rh = 6
     val he = hubRanked.select(col("vec_id"), col("embedding"), col("nsq"))
     // Stride-ring seeds by rank: guarantees every hub enters the
     // descent with links (no isolated bootstrap), but ring order is
-    // id order — SEMANTICALLY RANDOM. Round 13: the BuildProbe hit
+    // id order — SEMANTICALLY RANDOM. Round 13: the `Probe build` hit
     // gate showed 2 fixed rounds from ring seeds alone collapse at
     // 10× (0/64 head hits at 1333 hubs — the rounds cover a constant
     // ~(2R)² candidate set, a vanishing fraction of a growing hub
@@ -779,7 +779,7 @@ object Clustering {
     * the first `b` levels in Spark's `sim DESC` order (NaN first,
     * nulls last, 0.0 = -0.0).
     *
-    * Duplicate collapse (round 13, caught by the BuildProbe 10× hit
+    * Duplicate collapse (round 13, caught by the `Probe build` 10× hit
     * gate): on a corpus with exact-duplicate vectors (the 10× replica
     * is 10 copies of everything; real crawls ship the same page
     * thousands of times), every expansion yields whole copy-groups at
@@ -1027,7 +1027,7 @@ object Clustering {
     // walks overlap on a small DEDICATED pool (r17, VERDICT r16 #8: a
     // finite await turns a wedged job into an error instead of a
     // silent hang, and the pool is torn down whatever happens).
-    // Measured with TimeProbe at sf0.1 (q182, 4-core box, five warm
+    // Measured warm at sf0.1 (q182, 4-core box, five warm
     // runs each): 1.6-2.1 s pooled vs 2.8-4.5 s sequential.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.DurationInt
@@ -1173,7 +1173,7 @@ object Clustering {
   /** PER-PROBE entry set for the serving walk — the SPANN stance
     * (Chen et al. 2021: route each query to its nearest coarse
     * centers, then expand locally), adopted round 13 after the
-    * BuildProbe 10× gate measured PROBE-INDEPENDENT entries at 0/64
+    * `Probe build` 10× gate measured PROBE-INDEPENDENT entries at 0/64
     * head hits on the 10× replica at every tested hub degree: a
     * fixed-hop greedy walk cannot navigate a hub layer that GROWS
     * with the corpus when the data's intrinsic dimension gives the

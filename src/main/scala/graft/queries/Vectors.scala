@@ -2810,7 +2810,7 @@ object Vectors {
   /** The q191 oversampling sweep with PARAMETRIC widths: one Hamming
     * ranking, re-ranked top-8 at each width and scored against the
     * staged exact top-20, one (c_width, results, hits) row per width.
-    * q191 serves it at 16/64/256; KnobProbe chases the C knob past
+    * q191 serves it at 16/64/256; `Probe knob` chases the C knob past
     * those widths through the same code, so q191's oracle covers
     * every piece of it. */
   private[graft] def bqSweep(s: org.apache.spark.sql.SparkSession,
@@ -2913,7 +2913,7 @@ object Vectors {
   // exactly the property that makes it a deployment knob.
   /** q187/q201's served rows at (nprobe, C), each flagged against the
     * shared exact top-20 (the harness is the measurement, not the
-    * serving plan). KnobProbe sweeps (nprobe, C) past the registered
+    * serving plan). `Probe knob` sweeps (nprobe, C) past the registered
     * points through this builder. */
   private[graft] def ivfBqServed(s: org.apache.spark.sql.SparkSession, dir: String,
       nprobe: Int, cWidth: Int): DataFrame = {

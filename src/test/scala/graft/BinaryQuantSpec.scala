@@ -153,7 +153,7 @@ class BinaryQuantSpec extends SparkSuite {
     assert(hitsBy(256L) >= 40, s"widest width degenerated: ${hitsBy(256L)}")
   }
 
-  test("KnobProbe's builders reproduce the q191, q187 and q201 faces") {
+  test("the knob probe's builders reproduce the q191, q187 and q201 faces") {
     import org.apache.spark.sql.functions.{col, sum}
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq

@@ -107,9 +107,7 @@ class ClusteringSpec extends SparkSuite {
     spark.conf.set(aqe, "false")
     try {
       build()
-      val compiles0 = Bench.codegenTotals()._1
-      build()
-      val recompiled = Bench.codegenTotals()._1 - compiles0
+      val recompiled = Telemetry.measure(spark)(build())._2.compiles
       info(s"the second build compiled $recompiled classes")
       assert(recompiled <= 5, s"the second build compiled $recompiled classes")
     } finally spark.conf.set(aqe, saved)

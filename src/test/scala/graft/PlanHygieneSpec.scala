@@ -124,30 +124,18 @@ class PlanHygieneSpec extends SparkSuite {
     // The probes are driver-held already and the entries are brought
     // to the driver first, so every job the walk runs below is a hop
     // job.
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.queries.Clustering
     val (nodesP, g, probes, routed) = Clustering.navServing(spark, sfDir)
     val entries = Clustering.onDriver(routed)
-    val stagesPerJob = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        stagesPerJob.add(e.stageInfos.size): Unit
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try Seq(1, 5).foreach { hops =>
-      stagesPerJob.clear()
-      Clustering.beamWalkScored(nodesP, g, probes, entries, 16, hops)
-        .collect(): Unit
-      org.apache.spark.ListenerBusDrain(sc)
-      val jobs = stagesPerJob.asScala.toSeq
+    Seq(1, 5).foreach { hops =>
+      val jobs = jobsDuring {
+        Clustering.beamWalkScored(nodesP, g, probes, entries, 16, hops).collect()
+      }.map(_.stages)
       assert(jobs.size >= hops && jobs.size <= 2 * hops,
         s"$hops-hop walk ran ${jobs.size} jobs (expected $hops..${2 * hops})")
       assert(jobs.forall(_ == 1),
         s"$hops-hop walk ran a multi-stage (shuffle) job: stages per job $jobs")
-    } finally sc.removeSparkListener(listener)
+    }
   }
 
   test("navigable-graph build stays within its job budget (hub layer read once)") {

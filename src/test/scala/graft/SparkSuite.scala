@@ -12,20 +12,6 @@ trait SparkSuite extends AnyFunSuite {
     s
   }
 
-  /** The call site of every Spark job `f` starts, in start order. */
-  def jobsDuring(f: => Any): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        sites.add(e.stageInfos.lastOption.fold("?")(_.name)): Unit
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { f; org.apache.spark.ListenerBusDrain(sc) }
-    finally sc.removeSparkListener(listener)
-    sites.asScala.toSeq
-  }
+  /** Every Spark job `f` starts, in start order. */
+  def jobsDuring(f: => Any): Seq[Telemetry.Job] = Telemetry.measure(spark)(f)._2.jobs
 }

@@ -74,34 +74,24 @@ class StagedSpec extends SparkSuite {
   }
 
   test("a build's jobs carry its stage key; a nested build pushes and pops it") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        labels.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty(Staged.StageProperty)))
-          .getOrElse("-")): Unit
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       Staged.parquet(spark, "stagedspec_label_outer") {
         spark.range(10).count(): Unit
         Staged.parquet(spark, "stagedspec_label_inner")(Seq(2).toDF("v")).count(): Unit
         Seq(3).toDF("v")
-      }.count(): Unit
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val seq = labels.asScala.toSeq
+      }.count()
+    }
+    val labels = jobs.map(_.stage.getOrElse("-"))
     // consecutive jobs of one build collapse to one entry
-    val runs = seq.zipWithIndex.collect {
-      case (l, i) if i == 0 || seq(i - 1) != l => l
+    val runs = labels.zipWithIndex.collect {
+      case (l, i) if i == 0 || labels(i - 1) != l => l
     }
     assert(runs == Seq("stagedspec_label_outer", "stagedspec_label_inner",
-      "stagedspec_label_outer", "-"), s"job labels in order: $seq")
-    assert(sc.getLocalProperty(Staged.StageProperty) == null,
+      "stagedspec_label_outer", "-"), s"job labels in order: $jobs")
+    // the nested build is its write job alone, read off the same record
+    assert(jobs.count(_.stage.contains("stagedspec_label_inner")) == 1,
+      s"the nested build's jobs: $jobs")
+    assert(spark.sparkContext.getLocalProperty(Staged.StageProperty) == null,
       "the stage property outlived its build")
   }
 

@@ -120,9 +120,7 @@ class StreamingSpec extends SparkSuite {
     }
     tick(0)
     tick(1)
-    val compiles0 = Bench.codegenTotals()._1
-    tick(2)
-    val recompiled = Bench.codegenTotals()._1 - compiles0
+    val recompiled = Telemetry.measure(spark)(tick(2))._2.compiles
     info(s"the third tick compiled $recompiled classes")
     assert(recompiled <= 5, s"the third tick compiled $recompiled classes")
     assert(Incremental.readGold(spark, s"$tmp/gold").get.head().getAs[Long]("games") == 3)
@@ -273,25 +271,21 @@ class StreamingSpec extends SparkSuite {
 
   test("stream-stream interval join (watermarked attribution) == batch join of the union") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamJoin
-    import graft.streaming.StreamJoin.{ClickEv, ViewEv}
+    import graft.streaming.EventWindows
     val sfDir = "/root/testdata/sf0.001"
     val evs = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        expr("ts div 1000").as("ts_us"))
-    val views = evs.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id"), col("ts_us"))
-      .as[ViewEv].collect().sortBy(_.ts_us)
-    val clicks = evs.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
-      .as[ClickEv].collect().sortBy(_.ts_us)
+      .select(expr("ts div 1000").as("ts_us"), col("user_id"), col("event_type"),
+        col("value").cast("double").as("value"))
+      .as[EvRow].collect()
+    val views = evs.filter(_.event_type == "view").sortBy(_.ts_us)
+    val clicks = evs.filter(_.event_type == "click").sortBy(_.ts_us)
     // split both streams at the same wall-clock instant so neither
     // side's watermark races past unplayed data on the other
     val cut = (views.map(_.ts_us) ++ clicks.map(_.ts_us)).sorted.apply(
       (views.length + clicks.length) / 2)
-    val vs = MemoryStream[ViewEv]
-    val cs = MemoryStream[ClickEv]
-    val q = StreamJoin.attributed(vs.toDF(), cs.toDF())
+    val vs = MemoryStream[EvRow]
+    val cs = MemoryStream[EvRow]
+    val q = EventWindows.intervalJoin(vs.toDF(), cs.toDF())
       .writeStream.format("memory").queryName("attr_mem").outputMode("append").start()
     vs.addData(views.filter(_.ts_us <= cut).toSeq)
     cs.addData(clicks.filter(_.ts_us <= cut).toSeq)
@@ -300,64 +294,16 @@ class StreamingSpec extends SparkSuite {
     cs.addData(clicks.filter(_.ts_us > cut).toSeq)
     q.processAllAvailable()
     q.stop()
-    val streamed = spark.table("attr_mem")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val batch = StreamJoin.attributed(
-        spark.createDataset(views.toSeq).toDF(),
-        spark.createDataset(clicks.toSeq).toDF())
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    // (user_id, l_us, r_us, value) with multiplicity: two events of one
+    // user at one instant give equal rows
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long, Double)].collect().groupMapReduce(identity)(_ => 1)(_ + _)
+    val streamed = bag(spark.table("attr_mem"))
+    val batch = bag(EventWindows.intervalJoin(views.toSeq.toDF(), clicks.toSeq.toDF()))
     assert(batch.nonEmpty, "attribution fixture is vacuous — no view-click pair in horizon")
     assert(streamed == batch,
-      s"stream-only: ${streamed.diff(batch).take(5)}; batch-only: ${batch.diff(streamed).take(5)}")
-  }
-
-  test("left-outer stream-stream join: abandonment rows emit after the watermark passes") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamJoin
-    import graft.streaming.StreamJoin.{ClickEv, ViewEv}
-    val sfDir = "/root/testdata/sf0.001"
-    val evs = Tables.events(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        expr("ts div 1000").as("ts_us"))
-    val views = evs.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id"), col("ts_us"))
-      .as[ViewEv].collect().sortBy(_.ts_us)
-    val clicks = evs.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
-      .as[ClickEv].collect().sortBy(_.ts_us)
-    val maxTs = (views.map(_.ts_us) ++ clicks.map(_.ts_us)).max
-    // sentinels far past max + horizon + watermark advance both
-    // sides' watermarks so every real view's horizon has expired
-    val sentinelTs = maxTs + 10L * 3600 * 1000000
-    val vs = MemoryStream[ViewEv]
-    val cs = MemoryStream[ClickEv]
-    val q = StreamJoin.attributedOuter(vs.toDF(), cs.toDF())
-      .writeStream.format("memory").queryName("attr_outer_mem")
-      .outputMode("append").start()
-    vs.addData(views.toSeq)
-    cs.addData(clicks.toSeq)
-    q.processAllAvailable()
-    vs.addData(Seq(ViewEv(-1L, -1L, sentinelTs)))
-    cs.addData(Seq(ClickEv(-2L, -1L, sentinelTs)))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("attr_outer_mem")
-      .filter(col("view_id") =!= -1L) // drop the sentinel's own row(s)
-      .as[(Long, Long, Long, Option[Long], Option[Long])].collect().toSet
-    // batch oracle: inner matches + left-anti abandonment
-    val vDf = spark.createDataset(views.toSeq).toDF()
-    val cDf = spark.createDataset(clicks.toSeq).toDF()
-    val inner = StreamJoin.attributed(vDf, cDf)
-      .select(col("view_id"), col("user_id"), col("view_ts_us"),
-        col("click_id"), col("click_ts_us"))
-      .as[(Long, Long, Long, Option[Long], Option[Long])].collect().toSet
-    val abandoned = StreamJoin.attributedOuter(vDf, cDf)
-      .filter(col("click_id").isNull)
-      .as[(Long, Long, Long, Option[Long], Option[Long])].collect().toSet
-    assert(abandoned.nonEmpty, "fixture vacuous: every view converted")
-    val expected = inner ++ abandoned
-    assert(streamed == expected,
-      s"stream-only: ${streamed.diff(expected).take(5)}; batch-only: ${expected.diff(streamed).take(5)}")
+      s"stream-only: ${streamed.toSet.diff(batch.toSet).take(5)}; " +
+        s"batch-only: ${batch.toSet.diff(streamed.toSet).take(5)}")
   }
 
   test("streaming sequence packing (O(1)-per-lang state) == batch q81, partial tails included") {

@@ -108,4 +108,20 @@ class TablesSpec extends SparkSuite {
     val e = intercept[org.apache.spark.sql.AnalysisException](Tables.orders(spark, missing))
     assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
   }
+
+  test("a table read after an events read starts no job (one schema key per table)") {
+    // A fresh session of the suite's SparkContext, as each streaming
+    // query runs on. The events loader used to turn nanosAsLong on for
+    // its session, which changed every table's schema key, so a table
+    // read before the first events read inferred its schema again after it.
+    import spark.implicits._
+    val s = spark.newSession()
+    val dir = writeEvents(Seq((1L, epochUs * 1000L)).toDF("event_id", "ts"))
+    Seq((0L, "AFRICA")).toDF("r_regionkey", "r_name")
+      .coalesce(1).write.parquet(s"$dir/region.parquet")
+    Tables.region(s, dir)
+    Tables.events(s, dir)
+    val jobs = jobsDuring(Tables.region(s, dir))
+    assert(jobs.isEmpty, s"region read after events started ${jobs.size} jobs: $jobs")
+  }
 }
